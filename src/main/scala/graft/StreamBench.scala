@@ -117,8 +117,9 @@ object StreamBench {
     // read+rewriting every touched sink bucket — the merge cost moves
     // to one amortized compaction every 10 batches. Identical table
     // (LsmUpsertSinkSpec); this is the production posture for
-    // high-frequency small batches, and the compactions land INSIDE the
-    // measured batches, so the mean is honest.
+    // high-frequency small batches — the sink's own default without a
+    // changelog, so CrmlsStreamMain runs it too. Compactions run
+    // inline, INSIDE the measured batches, so the mean is honest.
     val compactEvery = sys.env.getOrElse("SPARK_GRAFT_SB_COMPACT", "10").toInt
     val sink = new UpsertJoin.ParquetUpsertSink(spark, sinkDir, nBuckets,
       deltaCompactEvery = compactEvery)
@@ -242,11 +243,11 @@ object StreamBench {
       // measured delta vs its log-off twin is the CDC emission tax.
       // NOTE the granularity: these mixes run the sink in delta (LSM)
       // mode, where emitChangelog fires at COMPACTION time — one
-      // netted retract-pair batch per compactEvery-append window, on
-      // the async compaction thread — so the tax lands amortized in
-      // the per-batch mean, and mean_changelog_mb_per_batch is the
+      // netted retract-pair batch per compactEvery-append window,
+      // inline in the append that fills it — so the tax lands amortized
+      // in the per-batch mean, and mean_changelog_mb_per_batch is the
       // window emission spread over the batches (total log growth
-      // including the final settled compaction / nBatches). The
+      // / nBatches). The
       // production CLI's merge-on-write sink (CrmlsStreamMain
       // --changelog-dir, no deltaCompactEvery) emits per batch
       // instead; its per-batch emission plan is the one-key-join
@@ -282,7 +283,6 @@ object StreamBench {
           mixSinkDir, fams, nBuckets, deltaCompactEvery = compactEvery)
         seeder.upsertPreparedUnique("l_uc_pk", sink.snapshot(spark),
           0 until nBuckets)
-        seeder.awaitCompaction()
         new graft.streaming.ColumnFamilySink(spark, mixSinkDir, fams,
           nBuckets, deltaCompactEvery = compactEvery)
       } else {
@@ -311,12 +311,6 @@ object StreamBench {
             .select(pmod(col("id"), lit(nAgents)).as("id")), ts))
           .unionByName(mediaBatch(pick(mediaRows, 2), ts))
         if (i == 0) {
-          // the warmup's forced seed compaction (see the mix-isolation
-          // note above) is async — settle it BEFORE the measured window
-          // so it doesn't steal cores from the first measured batches
-          // (compactions TRIGGERED inside the window still land in the
-          // mean, which is the honest amortized cost)
-          mixSink.awaitCompaction()
           snap = fileSizes(Seq(mixStateDir, mixSinkDir))
           clStart = clBytes()
         }
@@ -340,12 +334,7 @@ object StreamBench {
           snap = cur
         }
       }
-      // Quiesce before the next mix: an async compaction left in
-      // flight would keep burning cores into the NEXT mix's measured
-      // batches — measured as a consistent +1-3 s on whichever mix ran
-      // second in a pair (the narrowed tiers, always sequenced after
-      // their full-row twins, ate it every run). Settle the JVM too.
-      mixSink.awaitCompaction()
+      // settle the JVM before the next mix
       System.gc()
       val totalBytes = snap.values.sum
       val meanSec = times.sum / nBatches
@@ -363,10 +352,8 @@ object StreamBench {
         f""""total_state_mb":${totalBytes / 1e6}%.1f,""" +
         f""""rewrite_fraction":${meanRewrite / totalBytes}%.3f""" +
         (if (mixClDir.isDefined)
-          // total log growth over the measured window INCLUDING the
-          // final settled compaction (awaitCompaction ran above) — the
-          // per-batch sampling form missed whatever the last in-flight
-          // window emitted after its batch returned
+          // total log growth over the measured window, every
+          // compaction's emission included
           f""","mean_changelog_mb_per_batch":${(clBytes() - clStart).toDouble / nBatches / 1e6}%.2f"""
          else "")
 
@@ -476,13 +463,6 @@ object StreamBench {
         val j0 = counter.count.get()
         val b0 = System.nanoTime()
         gStore.maybeRehash()
-        // settle any in-flight compaction first: the sink's bucket
-        // bytes only materialize at compaction, and a boundary check
-        // racing the async fold reads the pre-fold (smaller) layout.
-        // Production skips this and simply catches the growth at a
-        // later boundary — eventual is the contract; the phase wants
-        // the crossing observed deterministically
-        gSink.awaitCompaction()
         gSink.maybeRehash("l_uc_pk")
         CrmlsStream.processBatch(spark, listingBatch(ids, 3000L + i),
           gStore, gSink)
@@ -502,7 +482,6 @@ object StreamBench {
           cur.filter(_._1.startsWith(sd)))
         snap = cur
       }
-      gSink.awaitCompaction()
       require(events.nonEmpty,
         s"growth phase grew state ${nGrow}x$chunk rows past $base seed " +
           "without firing a single rehash — threshold drift?")

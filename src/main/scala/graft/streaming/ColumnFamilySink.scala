@@ -56,9 +56,9 @@ import org.apache.spark.sql.functions._
   * use the row-major sink — stitching pairs at write time would need a
   * cross-family read of every touched key's untouched families, the
   * exact write amplification this layout exists to avoid. Changelog
-  * requires merge-on-write (deltaCompactEvery == 0): delta mode's
-  * per-compaction emission is asynchronous per family, which would
-  * tear the shared-stamp invariant.
+  * requires merge-on-write (deltaCompactEvery == 0): delta mode emits
+  * at each family's own compaction, which would tear the shared-stamp
+  * invariant.
   *
   * Crash caveat (same class as the row-major log's duplicate-on-replay
   * note): a crash BETWEEN two families' appends of one logical batch
@@ -89,8 +89,8 @@ final class ColumnFamilySink(
 
   require(changelogDir.isEmpty || deltaCompactEvery == 0,
     "column-family changelog requires merge-on-write " +
-      "(deltaCompactEvery = 0): delta-mode emission is per-family " +
-      "asynchronous and cannot share one batch stamp")
+      "(deltaCompactEvery = 0): delta-mode emission happens at each " +
+      "family's own compaction and cannot share one batch stamp")
 
   private val BaseFamily = "base"
   require(!families.exists(_._1 == BaseFamily),
@@ -171,7 +171,6 @@ final class ColumnFamilySink(
 
   override def bucketCount: Option[Int] = Some(curBuckets)
   override def supportsPartial: Boolean = true
-  override def awaitCompaction(): Unit = sinks.values.foreach(_.awaitCompaction())
 
   /** Growth rehash, families moving in lockstep: complete any crashed
     * per-family rehash first, then align every family to the largest

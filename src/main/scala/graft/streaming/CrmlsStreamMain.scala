@@ -17,6 +17,13 @@ import graft.sources.Streams
   * checkpoint conf block). Requires a broker, so it cannot execute in
   * the offline dev image — argument parsing and the tagged-union
   * construction are pure and covered by CrmlsStreamMainSpec.
+  *
+  * The sink is a [[UpsertJoin.ParquetUpsertSink]] on its default
+  * layout. Without `--changelog-dir` that is delta (LSM) mode: each
+  * micro-batch appends its enriched rows as one small generation, and
+  * every 10th append folds the window into the bucket files inline.
+  * With `--changelog-dir` it is merge-on-write, so the retract log
+  * gets one batch per micro-batch.
   */
 object CrmlsStreamMain {
 

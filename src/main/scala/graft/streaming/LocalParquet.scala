@@ -2,12 +2,14 @@ package graft.streaming
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetToSparkSchemaConverter, ParquetWriteSupport}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -30,9 +32,9 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale posture: this is a DRIVER fast path for delta-sized batches
   * (bounded by the caller's driver-tier row caps); anything larger
-  * takes the distributed frame path. Scope is deliberately append-file
-  * creation only — no directory semantics, no commit protocol (the
-  * caller owns markers/renames).
+  * takes the distributed frame path. Scope is deliberately single files
+  * (append-file creation and footer schema reads) — no directory
+  * semantics, no commit protocol (the caller owns markers/renames).
   */
 object LocalParquet {
 
@@ -84,6 +86,22 @@ object LocalParquet {
         case _: IllegalArgumentException => CompressionCodecName.SNAPPY.name()
       })
     conf
+  }
+
+  /** Spark schema of one parquet file, read from its footer on the
+    * driver with Spark's own footer logic (the stored row metadata, or
+    * the parquet type conversion when a file carries none). A
+    * schema-less `spark.read.parquet` infers the same schema through a
+    * Spark job; this costs one footer read and no job.
+    */
+  def readSchema(spark: SparkSession, file: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new Path(file)
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+    try ParquetFileFormat.readSchemaFromFooter(
+      new Footer(path, reader.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    finally reader.close()
   }
 
   /** Prepared-conf form of [[write]] — `conf` must come from

@@ -243,9 +243,11 @@ object UpsertJoin {
         spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
         touched)
 
-    /** Block until any asynchronous background work (LSM compactions)
-      * has settled — orderly shutdown and bench quiesce. No-op for
-      * sinks with no background work.
+    /** A no-op: no sink here runs background work
+      * ([[ParquetUpsertSink]]'s LSM compaction runs inline, in the
+      * append that fills its window). Kept only because the benchmark
+      * harness's forwarding sink overrides it; callers need not call
+      * it.
       */
     def awaitCompaction(): Unit = ()
 
@@ -330,6 +332,22 @@ object UpsertJoin {
   private[streaming] val rehashFailpoint =
     new java.util.concurrent.atomic.AtomicReference[String => Unit](null)
 
+  /** Test-only failpoint for the sink's LSM compaction, invoked after
+    * the bucket swaps and before the folded generations are deleted.
+    * Specs use it to crash in that window and to count compactions.
+    * Null (the default) is a no-op.
+    */
+  private[streaming] val compactFailpoint =
+    new java.util.concurrent.atomic.AtomicReference[() => Unit](null)
+
+  object ParquetUpsertSink {
+    /** Compaction cadence of a sink built without a changelog and
+      * without an explicit `deltaCompactEvery`: one fold every 10
+      * appends, the cadence StreamBench measures.
+      */
+    val DefaultCompactEvery: Int = 10
+  }
+
   /** Durable keyed upsert sink over hash-bucketed parquet
     * ([[BucketedState]]): merge = touched buckets' snapshot UNION
     * batch, keep one row per key — batch beats state, and ties WITHIN a
@@ -341,7 +359,10 @@ object UpsertJoin {
     * Delta/Iceberg-`MERGE INTO`-shaped sink realized on plain parquet;
     * at production scale swap the directory layer for a real MERGE —
     * the streaming side is unchanged. Snapshot size is one row per
-    * live key, not history.
+    * live key, not history. That is the merge-on-write form, which a
+    * sink with a changelog runs by default; without one the default is
+    * the delta (LSM) form, which applies the same merge once per
+    * compaction window (see `deltaCompactEvery`).
     */
   /** @param changelogDir when set, every upsert ALSO appends the
     *   batch's delta as a retract-style changelog — (op=false, oldRow)
@@ -357,22 +378,27 @@ object UpsertJoin {
     *   table itself stays correct — the merge is idempotent);
     *   production points this at a transactional log (e.g. a table
     *   format's CDF) for exactly-once.
-    * @param deltaCompactEvery 0 (default) = merge-on-write: every
-    *   upsert reads + rewrites its touched buckets. > 0 = LSM-style
-    *   merge-on-read: an upsert appends ONE small delta file (per-batch
-    *   write I/O is O(batch rows), and no state read at all), and every
-    *   N batches a compaction folds the accumulated deltas into the
-    *   bucket files. Precedence is the append generation (later batch
-    *   beats earlier beats base), exactly the sequential-merge order,
-    *   so snapshots are IDENTICAL to merge-on-write
-    *   (LsmUpsertSinkSpec). This is the posture for high-frequency
-    *   small batches — the merge-on-write form pays a read+rewrite of
-    *   every touched bucket per batch, which is the parquet small-file
-    *   tax that floors micro-batch latency. Crash-safe the same way
-    *   the merge path is: deltas are only deleted after their
-    *   compaction promotes, and re-applying an already-compacted delta
-    *   is a no-op (latest-wins on identical content). With
-    *   changelogDir set, retract pairs are emitted AT COMPACTION TIME
+    * @param deltaCompactEvery 0 = merge-on-write: every upsert reads +
+    *   rewrites its touched buckets. > 0 = LSM-style merge-on-read: an
+    *   upsert appends ONE small delta file (per-batch write I/O is
+    *   O(batch rows), and no state read at all), and every N batches a
+    *   compaction folds the accumulated deltas into the bucket files.
+    *   Negative (the default) picks by changelog: without
+    *   `changelogDir` the sink runs delta mode every
+    *   [[ParquetUpsertSink.DefaultCompactEvery]] batches, with one it
+    *   merges on write so the log keeps one retract batch per upsert.
+    *   Precedence is the append generation (later batch beats earlier
+    *   beats base), exactly the sequential-merge order, so snapshots
+    *   are IDENTICAL to merge-on-write (LsmUpsertSinkSpec). This is the
+    *   posture for high-frequency small batches — the merge-on-write
+    *   form pays a read+rewrite of every touched bucket per batch,
+    *   which is the parquet small-file tax that floors micro-batch
+    *   latency. The compaction runs inline, in the append that fills
+    *   the window. Crash-safe the same way the merge path is: deltas
+    *   are only deleted after their compaction's bucket swaps, and
+    *   re-applying an already-compacted delta is a no-op (latest-wins
+    *   on identical content). With changelogDir set, retract pairs are
+    *   emitted AT COMPACTION TIME
     *   (the one moment this mode has both the pre-image and the merged
     *   post-image in hand): one changelog batch per compaction window,
     *   collapsing the window's intermediate versions — the same
@@ -402,12 +428,18 @@ object UpsertJoin {
   final class ParquetUpsertSink(spark: SparkSession, dir: String,
                                 nBuckets: Int = 16,
                                 changelogDir: Option[String] = None,
-                                deltaCompactEvery: Int = 0,
+                                deltaCompactEvery: Int = -1,
                                 epochSource: Option[() => Long] = None,
                                 changelogCheckpointEvery: Int = 0)
       extends UpsertSink with Serializable {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
+
+    /** The resolved `deltaCompactEvery` (0 = merge-on-write). */
+    private val compactEvery: Int =
+      if (deltaCompactEvery >= 0) deltaCompactEvery
+      else if (changelogDir.isEmpty) ParquetUpsertSink.DefaultCompactEvery
+      else 0
 
     /** CURRENT bucket count: the constructor's `nBuckets` until a
       * growth rehash ([[maybeRehashIfDue]]), then the durable
@@ -448,9 +480,7 @@ object UpsertJoin {
       case _ => 0L
     }
 
-    /** Monotone changelog stamp, safe across the batch thread and the
-      * async compaction thread (delta mode emits from the latter).
-      */
+    /** Monotone changelog stamp. */
     private def nextEpoch(): Long = synchronized {
       epochSource match {
         case Some(src) => src()
@@ -485,18 +515,18 @@ object UpsertJoin {
       * recovered from the dir names, no Spark job.
       */
     private var gen: Long =
-      if (deltaCompactEvery > 0)
+      if (compactEvery > 0)
         deltaGenDirs(sweep = true).lastOption
           .map(_.getName.stripPrefix("g").toLong + 1L).getOrElse(0L)
       else 0L
     // force a compaction on the first append after a restart that found
     // pending deltas — their touched-bucket set is no longer known
-    private var sinceCompact: Int = if (gen > 0L) deltaCompactEvery else 0
+    private var sinceCompact: Int = if (gen > 0L) compactEvery else 0
 
     override def bucketCount: Option[Int] = Some(curBuckets)
 
     def upsert(keyCol: String, batch: DataFrame): Unit =
-      if (deltaCompactEvery > 0) {
+      if (compactEvery > 0) {
         // delta mode appends the whole batch in one job — running the
         // touched-bucket discovery collect here would spend exactly the
         // per-batch driver round-trip this mode exists to avoid
@@ -518,14 +548,14 @@ object UpsertJoin {
     override def upsertPrepared(keyCol: String, batch: DataFrame,
                                 touched: Seq[Int]): Unit =
       if (touched.nonEmpty) {
-        if (deltaCompactEvery > 0) appendDelta(keyCol, batch)
+        if (compactEvery > 0) appendDelta(keyCol, batch)
         else mergeWrite(keyCol, batch, touched.sorted, Some(batch.schema))
       }
 
     override def upsertPreparedUnique(keyCol: String, batch: DataFrame,
                                       touched: Seq[Int]): Unit =
       if (touched.nonEmpty) {
-        if (deltaCompactEvery > 0) appendDelta(keyCol, batch, keyUnique = true)
+        if (compactEvery > 0) appendDelta(keyCol, batch, keyUnique = true)
         else mergeWrite(keyCol, batch, touched.sorted, Some(batch.schema))
       }
 
@@ -546,39 +576,15 @@ object UpsertJoin {
       if (touched.nonEmpty) {
         require(batch.columns.contains(keyCol),
           s"partial batch must carry the key column $keyCol")
-        if (deltaCompactEvery > 0) appendDelta(keyCol, batch, keyUnique = true)
+        if (compactEvery > 0) appendDelta(keyCol, batch, keyUnique = true)
         else mergePartialWrite(keyCol, batch, touched.sorted)
       }
-
-    /** In-flight asynchronous compaction, if any. Compaction is
-      * self-contained (reads a FIXED list of committed generations +
-      * their touched base buckets, promotes new bucket files, deletes
-      * exactly the generations it read), so it can safely overlap
-      * subsequent appends — they only create NEW generation dirs.
-      * Running it off-thread takes the periodic multi-second rewrite
-      * out of the batch latency path; the next compaction (or any
-      * [[snapshot]] read) joins it first. A crash mid-compaction is
-      * the documented no-op-replay case either way.
-      */
-    @transient private var compacting: Option[scala.concurrent.Future[Unit]] =
-      None
-
-    private def joinCompaction(): Unit = {
-      compacting.foreach(f => scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf))
-      compacting = None
-    }
-
-    /** Block until any in-flight compaction has settled (tests and
-      * orderly shutdown).
-      */
-    override def awaitCompaction(): Unit = joinCompaction()
 
     /** Delta-mode upsert: dedup the batch per key with the SAME
       * deterministic survivor as the merge path (max content hash),
       * stamp the generation, append ONE file. No state read, no bucket
-      * rewrite — those costs move to the amortized [[compact]], which
-      * runs asynchronously.
+      * rewrite — those costs move to the amortized compaction
+      * ([[commitGen]]).
       */
     private def appendDelta(keyCol: String, batch: DataFrame,
                             keyUnique: Boolean = false): Unit = {
@@ -643,33 +649,22 @@ object UpsertJoin {
       val oneFile =
         if (!keyUnique || isLocalBatch) stamped.coalesce(1)
         else stamped.repartition(1)
-      if (sys.env.contains("SPARK_GRAFT_SB_PROFILE")) {
-        val t0 = System.nanoTime()
-        oneFile.queryExecution.executedPlan
-        val t1 = System.nanoTime()
-        oneFile.write.mode("overwrite").parquet(s"$deltaDir/g$gen")
-        val t2 = System.nanoTime()
-        println(f"[profile] append:plan ${(t1 - t0) / 1e9}%6.2fs " +
-          f"write ${(t2 - t1) / 1e9}%6.2fs local=$isLocalBatch")
-      } else
       oneFile.write.mode("overwrite").parquet(s"$deltaDir/g$gen")
       commitGen(keyCol)
     }
 
     /** Shared post-append bookkeeping: advance the generation counter
-      * and kick the amortized async compaction when the window fills.
+      * and, in the append that fills the window, compact it inline.
+      * (An off-thread compaction kept a window's sort pages on the heap
+      * while it ran, which made the retained heap bimodal.)
       */
     private def commitGen(keyCol: String): Unit = {
       gen += 1
       sinceCompact += 1
-      if (sinceCompact >= deltaCompactEvery) {
-        joinCompaction() // one compaction in flight at a time
+      if (sinceCompact >= compactEvery) {
         val gens = deltaGenDirs(sweep = true)
         sinceCompact = 0
-        if (gens.nonEmpty) {
-          import scala.concurrent.ExecutionContext.Implicits.global
-          compacting = Some(scala.concurrent.Future(compact(keyCol, gens)))
-        }
+        if (gens.nonEmpty) compact(keyCol, gens)
       }
     }
 
@@ -689,7 +684,7 @@ object UpsertJoin {
         schema: org.apache.spark.sql.types.StructType,
         touched: Seq[Int]): Unit =
       if (touched.nonEmpty) {
-        if (deltaCompactEvery <= 0 || rows.length > 200000)
+        if (compactEvery <= 0 || rows.length > 200000)
           super.upsertPartialRowsUnique(spark, keyCol, rows, schema, touched)
         else appendDeltaRowsLocal(spark, keyCol, rows, schema)
       }
@@ -704,7 +699,7 @@ object UpsertJoin {
         schema: org.apache.spark.sql.types.StructType,
         touched: Seq[Int]): Unit =
       if (touched.nonEmpty) {
-        if (deltaCompactEvery <= 0 || rows.length > 200000)
+        if (compactEvery <= 0 || rows.length > 200000)
           super.upsertPreparedRowsUnique(spark, keyCol, rows, schema,
             touched)
         else appendDeltaRowsLocal(spark, keyCol, rows, schema)
@@ -764,24 +759,27 @@ object UpsertJoin {
       commitGen(keyCol)
     }
 
-    /** Fold the given pending deltas into the bucket files: latest
-      * generation wins per key (base reads as generation -1), exactly
-      * the order sequential merge-on-write applied. Deletes EXACTLY
-      * the generation dirs it was given, only after the bucket swaps
-      * promote — generations appended while an async compaction runs
-      * are untouched, and a crash in between replays the compacted
-      * deltas onto the already-merged base, where latest-wins makes
-      * the replay a no-op.
+    /** Parquet part files directly under `d` (none if `d` is absent). */
+    private def partFiles(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles()).toSeq.flatten
+        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
+        .sortBy(_.getName)
+
+    /** Spark schema of a committed generation, from its first part
+      * file's footer — read on the driver, no inference job. The footer
+      * is the one presence record that survives restarts: no in-memory
+      * schema cache can say which columns a pre-crash partial append
+      * carried.
       */
-    /** Committed generations as (generation number, frame) — one
-      * parquet-footer schema inference per gen dir (a single file
-      * each, bounded by the compaction window). The footer is the one
-      * presence record that survives restarts: no in-memory schema
-      * cache can say which columns a pre-crash partial append carried.
+    private def genSchema(g: java.io.File): org.apache.spark.sql.types.StructType =
+      LocalParquet.readSchema(spark, partFiles(g).head.getPath)
+
+    /** Committed generations as (generation number, frame), each read
+      * with its footer schema.
       */
     private def genFrames(gens: Seq[java.io.File]): Seq[(Long, DataFrame)] =
-      gens.map(g =>
-        (g.getName.stripPrefix("g").toLong, spark.read.parquet(g.getPath)))
+      gens.map(g => (g.getName.stripPrefix("g").toLong,
+        spark.read.schema(genSchema(g)).parquet(g.getPath)))
 
     private def rowFields(s: org.apache.spark.sql.types.StructType)
         : Seq[org.apache.spark.sql.types.StructField] =
@@ -938,6 +936,14 @@ object UpsertJoin {
         applyCells(base, cells, keyCol, fullFields, cellFields)
       }
 
+    /** Fold one compaction window's generations into the bucket files:
+      * latest generation wins per key (base reads as generation -1),
+      * exactly the order sequential merge-on-write applied. Deletes
+      * EXACTLY the generation dirs it was given, only after the bucket
+      * swaps promote — a crash in between replays the compacted deltas
+      * onto the already-merged base, where latest-wins makes the replay
+      * a no-op.
+      */
     private def compact(keyCol: String, gens: Seq[java.io.File]): Unit = {
       val gdfs = genFrames(gens)
       val genFields = gdfs.map { case (_, df) => rowFields(df.schema) }
@@ -995,6 +1001,7 @@ object UpsertJoin {
           merged, delKeys)
       }
       BucketedState.overwriteBuckets(spark, dir, out, touched)
+      Option(compactFailpoint.get()).foreach(_())
       gens.foreach(g => BucketedState.deleteRecursively(g.toPath))
       clEpoch.foreach(maybeChangelogCheckpoint)
     }
@@ -1057,19 +1064,9 @@ object UpsertJoin {
         .drop("__tie", "__rn")
         .withColumn(BucketedState.BucketColName,
           BucketedState.bucketOf(col(keyCol), curBuckets))
-      // phase walls on request, SPARK_GRAFT_SB_PROFILE-style
-      def timed[T](name: String)(f: => T): T =
-        if (sys.env.contains("SPARK_GRAFT_CL_PROFILE")) {
-          val t0 = System.nanoTime()
-          val r = f
-          println(f"[clprof] mergeWrite:$name ${(System.nanoTime() - t0) / 1e9}%6.3fs")
-          r
-        } else f
       changelogDir match {
         case None =>
-          timed("buckets") {
-            BucketedState.overwriteBuckets(spark, dir, merged, touched)
-          }
+          BucketedState.overwriteBuckets(spark, dir, merged, touched)
         case Some(clDir) if touched.isEmpty =>
           // zero touched buckets (a batch whose rows all vanished
           // upstream): nothing to stage or promote — staging would
@@ -1077,10 +1074,8 @@ object UpsertJoin {
           // (r12 advice). Emit the (empty) changelog epoch directly
           // from the merge plan so epoch numbering still advances
           // exactly as the log's consumers expect.
-          val clEpoch = timed("changelog") {
-            emitChangelog(clDir, keyCol, cur,
-              merged.drop(BucketedState.BucketColName), batch)
-          }
+          val clEpoch = emitChangelog(clDir, keyCol, cur,
+            merged.drop(BucketedState.BucketColName), batch)
           maybeChangelogCheckpoint(clEpoch)
         case Some(clDir) =>
           // With a changelog the merged rows drive TWO actions, and
@@ -1098,9 +1093,8 @@ object UpsertJoin {
           // possibly one batch ahead — exactly today's death between
           // changelog append and bucket swap — and epoch recovery
           // resumes past the logged batch either way.
-          val tmp = timed("buckets:stage") {
+          val tmp =
             BucketedState.writeBucketsInflight(spark, dir, merged, touched)
-          }
           // read back with the known merge schema: no footer-inference
           // job, and a staged write that produced zero files (all rows
           // filtered) still reads as a valid empty frame (r13)
@@ -1109,12 +1103,8 @@ object UpsertJoin {
             .parquet(tmp.toString)
             .select(merged.columns.filter(_ != BucketedState.BucketColName)
               .map(col): _*)
-          val clEpoch = timed("changelog") {
-            emitChangelog(clDir, keyCol, cur, mergedBack, batch)
-          }
-          timed("buckets:promote") {
-            BucketedState.promoteBuckets(dir, touched)
-          }
+          val clEpoch = emitChangelog(clDir, keyCol, cur, mergedBack, batch)
+          BucketedState.promoteBuckets(dir, touched)
           maybeChangelogCheckpoint(clEpoch)
       }
     }
@@ -1194,10 +1184,9 @@ object UpsertJoin {
       val fin = new java.io.File(root, s"ckpt=$e")
       if (!fin.exists()) {
         val tmp = new java.io.File(root, s".tmp-$e")
-        // Copy the bucket files, NOT snapshot() (this runs on the async
-        // compaction thread in delta mode, where snapshot()'s
-        // joinCompaction() would await the very future executing us)
-        // and NOT a Spark read+rewrite (r12: that paid a full
+        // Copy the bucket files, NOT snapshot() (in delta mode it would
+        // fold pending generations that belong to later batches) and
+        // NOT a Spark read+rewrite (r12: that paid a full
         // re-encode job per checkpoint for byte-content the bucket
         // files already hold — post-merge bucket files are
         // schema-uniform parquet, so a driver-side file copy is the
@@ -1205,14 +1194,10 @@ object UpsertJoin {
         // is a sequential I/O pass where the rewrite was
         // decode+shuffle-free-but-re-encode). Post-swap bucket files
         // ARE the converged table as of batch e in every caller: the
-        // swap just applied batch e's merge, and generations appended
-        // concurrently belong to future batches.
-        val parts = BucketedState.listBuckets(dir).flatMap { b =>
-          val d = new java.io.File(dir, s"bucket_$b")
-          Option(d.listFiles()).getOrElse(Array.empty)
-            .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-            .map(f => (b, f))
-        }
+        // swap just applied batch e's merge (in delta mode, the
+        // compaction that emitted e folded every pending generation).
+        val parts = BucketedState.listBuckets(dir).flatMap(b =>
+          partFiles(new java.io.File(dir, s"bucket_$b")).map(f => (b, f)))
         if (parts.nonEmpty) {
           tmp.mkdirs()
           parts.foreach { case (b, f) =>
@@ -1329,14 +1314,13 @@ object UpsertJoin {
       * can heal. Content-identical by construction — no changelog emit
       * (the forced fold emits its own window, as any compaction does).
       */
-    /** Fold any pending LSM deltas into the bucket files NOW (and wait
-      * for in-flight compaction first). Orderly-shutdown/handoff API,
+    /** Fold any pending LSM deltas into the bucket files NOW.
+      * Orderly-shutdown/handoff API,
       * and the rehash's prerequisite — pending rows carry bucket ids of
       * the current count, and [[bucketBytes]] only sees bucket files.
       */
     private[graft] def forceCompact(keyCol: String): Unit = synchronized {
-      joinCompaction()
-      if (deltaCompactEvery > 0) {
+      if (compactEvery > 0) {
         val gens = deltaGenDirs(sweep = true)
         if (gens.nonEmpty) { compact(keyCol, gens); sinceCompact = 0 }
       }
@@ -1410,9 +1394,8 @@ object UpsertJoin {
       * compactions happened to run.
       */
     def snapshot(spark: SparkSession): DataFrame = {
-      joinCompaction() // serve a settled view, not a mid-swap one
       val base = BucketedState.readAll(spark, dir)
-      val gens = if (deltaCompactEvery > 0) deltaGenDirs(sweep = false) else Nil
+      val gens = if (compactEvery > 0) deltaGenDirs(sweep = false) else Nil
       if (gens.isEmpty) {
         base.getOrElse(throw new IllegalStateException(
           s"no state written yet under $dir"))
@@ -1462,7 +1445,6 @@ object UpsertJoin {
     def snapshotAt(keyCol: String, batchId: Long): DataFrame = {
       val clDir = changelogDir.getOrElse(throw new IllegalStateException(
         "snapshotAt needs a changelog: construct the sink with changelogDir"))
-      awaitCompaction() // delta mode emits changelog at compaction time
       UpsertJoin.snapshotAt(spark, clDir, keyCol, batchId)
     }
   }

@@ -20,7 +20,8 @@ class StreamBenchSpec extends SparkTestBase {
     // computation below — a changed store default cannot desync them
     val nBuckets = 16
     val store = new CrmlsStream.StateStore(spark, s"$tmp/state", nBuckets)
-    val sink = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/sink", nBuckets)
+    val sink = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/sink", nBuckets,
+      deltaCompactEvery = 0)
     // ref-free listing payloads: no reference-index entries, so the
     // only writable state is the listing table + the sink — both keyed
     // by l_uc_pk, making the expected bucket set exactly computable

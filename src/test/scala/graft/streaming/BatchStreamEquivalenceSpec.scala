@@ -41,7 +41,8 @@ class BatchStreamEquivalenceSpec extends SparkTestBase {
     "aa_uc_pk", "aa_uc_created_ts", "ab_uc_pk", "oa_uc_pk",
     "o_listing_key", "m_resource_record_key", "h_resource_record_key")
 
-  private def batchResult(): Set[Seq[Any]] = {
+  private def batchResult(
+      history: Seq[(String, String)] = history): Set[Seq[Any]] = {
     val byEntity = history.groupBy(_._1).map { case (k, v) =>
       k -> v.map(_._2).toDF("value")
     }
@@ -196,6 +197,28 @@ class BatchStreamEquivalenceSpec extends SparkTestBase {
       .select(compareCols.map(col): _*)
       .collect().map(_.toSeq).toSet
     assert(reassembled === expected, "changelog reassembly")
+  }
+
+  test("the CLI's default sink converges across compaction windows") {
+    // one micro-batch per record, with enough listing re-updates for
+    // the default sink to fill at least two compaction windows
+    val updates = (0 until 20).map { i =>
+      "listings" -> env(s"L${i % 3 + 1}", 300 + i,
+        s"""{"ListingKeyNumeric":"LK${i % 3 + 1}-v$i",""" +
+          s""""ListAgentKeyNumeric":"A${i % 2 + 1}","ListOfficeKeyNumeric":"O1"}""")
+    }
+    val long = history ++ updates
+    val compactions = new java.util.concurrent.atomic.AtomicInteger()
+    UpsertJoin.compactFailpoint.set(() => compactions.incrementAndGet())
+    val got =
+      try streamResult(long.map(Seq(_)), mkSink = tmp =>
+        // as CrmlsStreamMain.main builds it without --changelog-dir:
+        // the directory and the defaults
+        new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/sink"))
+      finally UpsertJoin.compactFailpoint.set(null)
+    assert(got === batchResult(long))
+    assert(compactions.get >= 2,
+      s"expected >= 2 compaction windows, ran $compactions")
   }
 
   test("narrowed dim-only sink deltas converge to the same table") {

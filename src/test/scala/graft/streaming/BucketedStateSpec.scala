@@ -65,7 +65,8 @@ class BucketedStateSpec extends SparkTestBase {
   test("ParquetUpsertSink rewrites only touched buckets, batch wins") {
     val nBuckets = 8
     val dir = Files.createTempDirectory("graft-bucketed-sink").toString + "/t"
-    val sink = new UpsertJoin.ParquetUpsertSink(spark, dir, nBuckets)
+    val sink = new UpsertJoin.ParquetUpsertSink(spark, dir, nBuckets,
+      deltaCompactEvery = 0)
     sink.upsert("k", (0 until 20).map(i => (s"k$i", i)).toDF("k", "v"))
     val before = fileMap(dir)
 
@@ -82,7 +83,8 @@ class BucketedStateSpec extends SparkTestBase {
   test("recover heals a crash between the two bucket-swap renames") {
     val nBuckets = 4
     val dir = Files.createTempDirectory("graft-recover").toString + "/t"
-    val sink = new UpsertJoin.ParquetUpsertSink(spark, dir, nBuckets)
+    val sink = new UpsertJoin.ParquetUpsertSink(spark, dir, nBuckets,
+      deltaCompactEvery = 0)
     sink.upsert("k", (0 until 12).map(i => (s"k$i", i)).toDF("k", "v"))
     val want = sink.snapshot(spark).as[(String, Int)].collect().toSet
 

@@ -67,7 +67,8 @@ class ColumnFamilySinkSpec extends SparkTestBase {
   test("column-family merge-on-write matches the row-major sink") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-cf").toString
     val cf = new ColumnFamilySink(spark, s"$tmp/cf", fams, nBuckets = 4)
-    val rowMajor = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/rm", 4)
+    val rowMajor = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/rm", 4,
+      deltaCompactEvery = 0)
     drive(cf); drive(rowMajor)
     assert(rowsOf(cf) === expected, "hand-computed table")
     assert(rowsOf(cf) === rowsOf(rowMajor), "row-major equivalence")
@@ -86,7 +87,6 @@ class ColumnFamilySinkSpec extends SparkTestBase {
     val eager = new ColumnFamilySink(spark, s"$tmp/e", fams, 4,
       deltaCompactEvery = 2)
     drive(eager)
-    eager.awaitCompaction()
     assert(rowsOf(eager) === expected, "compaction fold per family")
 
     val reopened = new ColumnFamilySink(spark, s"$tmp/l", fams, 4,
@@ -94,7 +94,6 @@ class ColumnFamilySinkSpec extends SparkTestBase {
     assert(rowsOf(reopened) === expected, "restart: footer-driven fold")
     reopened.upsertPartialUnique("k", partial(Seq("x_1"),
       Seq(Row("k1", "x1R"))), 0 until 4)
-    reopened.awaitCompaction()
     assert(rowsOf(reopened) ===
       (expected.filterNot(_._1 == "k1") +
         (("k1", Some(1), Some("x1R"), None, Some("y11")))),
@@ -113,7 +112,6 @@ class ColumnFamilySinkSpec extends SparkTestBase {
       deltaCompactEvery = 2)
     sink.upsert("k", full(
       ("k1", 1, "x11", "x21", "y11"), ("k2", 2, "x12", "x22", "y12")))
-    sink.awaitCompaction()
     def familyBytes(f: String): Map[String, Seq[Byte]] = {
       def walk(d: java.io.File): Seq[java.io.File] =
         if (!d.exists()) Nil
@@ -131,7 +129,6 @@ class ColumnFamilySinkSpec extends SparkTestBase {
       Seq(Row("k1", "A"))), 0 until 4)
     sink.upsertPartialUnique("k", partial(Seq("x_2"),
       Seq(Row("k2", "B"))), 0 until 4)
-    sink.awaitCompaction()
     assert(familyBytes("fy") === fyBefore,
       "fy must be untouched by fx traffic, through compaction")
     assert(familyBytes("base") === baseBefore,

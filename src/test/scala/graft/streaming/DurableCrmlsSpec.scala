@@ -22,7 +22,10 @@ class DurableCrmlsSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val tmp = java.nio.file.Files.createTempDirectory("graft-durable").toString
     val store = new CrmlsStream.StateStore(spark, s"$tmp/state")
-    val sink = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/out")
+    // merge-on-write: the plain-parquet read below needs bucket files
+    // after every batch, not every compaction window
+    val sink = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/out",
+      deltaCompactEvery = 0)
     val input = MemoryStream[(String, String)]
     val tagged = input.toDF().toDF("entity", "value")
 

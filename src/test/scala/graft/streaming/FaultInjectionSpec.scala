@@ -115,10 +115,6 @@ class FaultInjectionSpec extends SparkTestBase {
           } catch { case _: InjectedCrash => true }
           finally CrmlsStream.failpoint.set(null)
         assert(crashed, s"failpoint $killPhase did not fire on batch $i")
-        // a real crash kills the JVM; here the abandoned sink may still
-        // have an async compaction in flight over the same dirs —
-        // quiesce it so it cannot race the replacement's replay writes
-        sink.awaitCompaction()
         // restart: new instances over the same dirs, replay the batch
         store = mkStore(s"$tmp/state")
         sink = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/sink", 4)
@@ -166,7 +162,6 @@ class FaultInjectionSpec extends SparkTestBase {
       var sink = mkSink()
       splits.foreach(b => CrmlsStream.processBatch(spark, batchDf(b), store,
         sink))
-      sink.awaitCompaction()
       val before = sink.snapshot(spark).select(compareCols.map(col): _*)
         .collect().map(_.toSeq).toSet
       assert(before === expected)
@@ -207,7 +202,6 @@ class FaultInjectionSpec extends SparkTestBase {
       // and the instance keeps converging under the final layout
       CrmlsStream.processBatch(spark, batchDf(splits.last),
         defaultStore(s"$tmp/state"), sink)
-      sink.awaitCompaction()
       assert(sink.snapshot(spark).select(compareCols.map(col): _*)
         .collect().map(_.toSeq).toSet === expected)
     }
@@ -241,10 +235,6 @@ class FaultInjectionSpec extends SparkTestBase {
           // some batches may not touch the family at all — then the
           // batch simply completed and there is nothing to replay
           if (crashed) {
-            // quiesce the abandoned sink's async compaction before a
-            // replacement touches the same dirs (test-only race: a
-            // real crash takes the JVM with it)
-            sink.awaitCompaction()
             store = defaultStore(s"$tmp/state")
             sink = mkSink()
             CrmlsStream.processBatch(spark, batchDf(b), store, sink)

@@ -25,19 +25,42 @@ class LsmUpsertSinkSpec extends SparkTestBase {
     Seq(("c", 2, "b4"))
   )
 
-  private def drive(sink: UpsertJoin.UpsertSink): Unit =
-    batches.foreach(b => sink.upsert("k", batchDf(b)))
+  // 35 batches of 3 distinct keys over 12: three full windows of the
+  // default compaction cadence plus a pending tail
+  private val longBatches: Seq[Seq[(String, Int, String)]] =
+    (0 until 35).map(i => Seq(0, 7, 14).map { o =>
+      (s"k${(5 * i + o) % 12}", i * 10 + o, s"L$i")
+    })
+
+  private def drive(sink: UpsertJoin.UpsertSink,
+                    seq: Seq[Seq[(String, Int, String)]] = batches): Unit =
+    seq.foreach(b => sink.upsert("k", batchDf(b)))
 
   private def rowsOf(sink: UpsertJoin.UpsertSink): Set[(String, Int, String)] =
     sink.snapshot(spark).select("k", "v", "tag")
       .as[(String, Int, String)].collect().toSet
 
+  /** Runs `body` and returns the number of compactions it ran. */
+  private def compactions(body: => Unit): Int = {
+    var n = 0
+    UpsertJoin.compactFailpoint.set(() => n += 1)
+    try body finally UpsertJoin.compactFailpoint.set(null)
+    n
+  }
+
+  private final class InjectedCrash extends RuntimeException("injected")
+
   test("delta-mode snapshot equals merge-on-write, compacted or not") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-lsm").toString
-    val merge = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/m", nBuckets = 4)
+    val merge = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/m",
+      nBuckets = 4, deltaCompactEvery = 0)
     drive(merge)
     val expected = rowsOf(merge)
     assert(expected.nonEmpty)
+    val mergeLong = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/ml",
+      nBuckets = 4, deltaCompactEvery = 0)
+    drive(mergeLong, longBatches)
+    val expectedLong = rowsOf(mergeLong)
 
     // never compacts within the sequence (threshold > batches)
     val lazyLsm = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/l", 4,
@@ -50,6 +73,51 @@ class LsmUpsertSinkSpec extends SparkTestBase {
       deltaCompactEvery = 2)
     drive(eager)
     assert(rowsOf(eager) === expected, "compaction must not change the table")
+
+    // the default sink (no changelog): three windows, each compacted
+    // inline
+    val default = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/d", 4)
+    assert(compactions(drive(default, longBatches)) === 3)
+    assert(rowsOf(default) === expectedLong, "default sink, 3 windows")
+
+    // a restart that finds committed generations not yet compacted:
+    // the first append folds them, later windows fold as usual
+    val first = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/r", 4)
+    drive(first, longBatches.take(15))
+    val restarted = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/r", 4)
+    assert(compactions(drive(restarted, longBatches.drop(15))) === 2)
+    assert(rowsOf(restarted) === expectedLong, "compaction after restart")
+
+    // a crash between the bucket swaps and the generation deletes: the
+    // restarted sink replays the folded generations onto the merged
+    // base (and the crashed batch itself) and converges
+    val crashing = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/c", 4)
+    drive(crashing, longBatches.take(9))
+    UpsertJoin.compactFailpoint.set(() => throw new InjectedCrash)
+    try intercept[InjectedCrash](drive(crashing, longBatches.slice(9, 10)))
+    finally UpsertJoin.compactFailpoint.set(null)
+    assert(new java.io.File(s"$tmp/c/__delta").listFiles()
+      .count(_.getName.startsWith("g")) === 10,
+      "the crash left the folded generations on disk")
+    val recovered = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/c", 4)
+    assert(compactions(drive(recovered, longBatches.drop(9))) === 3)
+    assert(rowsOf(recovered) === expectedLong, "replay after a torn fold")
+
+    // a window whose generations carry different column sets (a
+    // column-narrowed upsert) takes the per-column fold; later windows,
+    // uniform again, take the whole-row fold
+    val partial = Seq(("k1", 999)).toDF("k", "v")
+    val mergeMixed = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/mm", 4,
+      deltaCompactEvery = 0)
+    val mixed = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/x", 4)
+    Seq(mergeMixed, mixed).foreach { sink =>
+      assert(compactions {
+        drive(sink, longBatches.take(9))
+        sink.upsertPartialUnique("k", partial, 0 until 4)
+        drive(sink, longBatches.drop(9))
+      } === (if (sink eq mixed) 3 else 0))
+    }
+    assert(rowsOf(mixed) === rowsOf(mergeMixed), "mixed column sets")
   }
 
   test("appends between compactions write only delta files") {
@@ -61,7 +129,6 @@ class LsmUpsertSinkSpec extends SparkTestBase {
     val compacted = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/s", 4,
       deltaCompactEvery = 1)
     compacted.upsert("k", batchDf(batches(1)))
-    compacted.awaitCompaction() // compaction runs async off the batch path
     val before = graft.StreamBench.fileSizes(Seq(s"$tmp/s"))
     assert(before.keys.exists(_.contains("bucket_")), "compaction ran")
 
@@ -86,7 +153,8 @@ class LsmUpsertSinkSpec extends SparkTestBase {
     // fresh instance over the same dir (e.g. after a driver restart)
     val second = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/s", 4,
       deltaCompactEvery = 100)
-    val merge = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/m", nBuckets = 4)
+    val merge = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/m",
+      nBuckets = 4, deltaCompactEvery = 0)
     batches.take(3).foreach(b => merge.upsert("k", batchDf(b)))
     assert(rowsOf(second) === rowsOf(merge), "restart reads pending deltas")
 
@@ -118,7 +186,6 @@ class LsmUpsertSinkSpec extends SparkTestBase {
         0 until 4)
       viaFrame.upsertPreparedUnique("k", df, 0 until 4)
     }
-    viaRows.awaitCompaction(); viaFrame.awaitCompaction()
     assert(rowsOf(viaRows) === rowsOf(viaFrame))
     // restart over the rows-appended dir (pending gens survive)
     val reopened = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/r", 4,

@@ -72,7 +72,8 @@ class PartialUpsertSpec extends SparkTestBase {
 
   test("merge-on-write partial merge") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-pu").toString
-    val sink = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/s", nBuckets = 4)
+    val sink = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/s", nBuckets = 4,
+      deltaCompactEvery = 0)
     drive(sink)
     assert(rowsOf(sink) === expected)
   }
@@ -102,7 +103,6 @@ class PartialUpsertSpec extends SparkTestBase {
     // come out identical once the deltas promote into bucket files
     reopened.upsertPartialUnique("k", partial(Seq("a"),
       Seq(Row("k1", Int.box(111)))), 0 until 4)
-    reopened.awaitCompaction()
     val after = expected.filterNot(_._1 == "k1") +
       (("k1", Some(111), None, None))
     assert(rowsOf(reopened) === after, "post-restart compaction")
@@ -135,7 +135,6 @@ class PartialUpsertSpec extends SparkTestBase {
     // one batch: k1.b explicitly NULL; k2 untouched on b (absent row)
     sink.upsertPartialUnique("k", partial(Seq("b"),
       Seq(Row("k1", null))), 0 until 4)
-    sink.awaitCompaction()
     val got = rowsOf(sink)
     assert(got === Set(
       ("k1", Some(1), None, Some("c1")),
@@ -164,11 +163,9 @@ class PartialUpsertSpec extends SparkTestBase {
     val loader = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/s", 4,
       deltaCompactEvery = 1)
     loader.upsert("k", full(("k1", 1, "b1", "c1"), ("k2", 2, "b2", "c2")))
-    loader.awaitCompaction()
     val lazySink = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/s", 4,
       deltaCompactEvery = 100)
     waves.foreach(w => lazySink.upsertPartialUnique("k", w, 0 until 4))
-    lazySink.awaitCompaction()
     assert(rowsOf(lazySink) === rowsOf(ref), "merge-on-read uniform fold")
     assert(new java.io.File(s"$tmp/s/__delta").listFiles()
       .count(_.getName.startsWith("g")) >= 2,
@@ -180,7 +177,6 @@ class PartialUpsertSpec extends SparkTestBase {
       deltaCompactEvery = 100)
     reopened.upsertPartialUnique("k", partial(Seq("b"),
       Seq(Row("k3", "z3"))), 0 until 4)
-    reopened.awaitCompaction()
     ref.upsertPartialUnique("k", partial(Seq("b"),
       Seq(Row("k3", "z3"))), 0 until 4)
     assert(rowsOf(reopened) === rowsOf(ref), "uniform-window compaction")

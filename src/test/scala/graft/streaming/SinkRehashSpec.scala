@@ -59,7 +59,8 @@ class SinkRehashSpec extends SparkTestBase {
       "regrow the layout without any external lever") {
     val tmp = Files.createTempDirectory("graft-skrh-sz").toString
     val dir = s"$tmp/out"
-    val sink = new UpsertJoin.ParquetUpsertSink(spark, dir, nBuckets = 1)
+    val sink = new UpsertJoin.ParquetUpsertSink(spark, dir, nBuckets = 1,
+      deltaCompactEvery = 0)
     // ~4 MB of incompressible-ish payload against a 1 MB/bucket target
     val big = spark.range(4000).select(
       concat(lit("k"), col("id")).as("k"), col("id").as("ts"),
@@ -92,7 +93,6 @@ class SinkRehashSpec extends SparkTestBase {
       deltaCompactEvery = 10)
     sink.upsert("k", (0 until 50).map(i => (s"k$i", 1L, "a")).toDF("k", "ts", "p"))
     sink.upsert("k", Seq(("k1", 2L, "b"), ("k99", 1L, "new")).toDF("k", "ts", "p"))
-    sink.awaitCompaction()
     val before = table(sink) // merge-on-read over the 2 pending gens
     assert(new java.io.File(s"$dir/__delta").listFiles()
       .exists(_.getName.startsWith("g")), "test setup: pendings must exist")
@@ -108,14 +108,14 @@ class SinkRehashSpec extends SparkTestBase {
 
     sink.upsert("k", Seq(("k2", 9L, "c")).toDF("k", "ts", "p"))
     assert(table(sink) === before.updated("k2", (9L, "c")))
-    sink.awaitCompaction()
   }
 
   test("rehash keeps schema-divergent buckets (partial-upsert widening) " +
       "intact via a merged-schema rebuild") {
     val tmp = Files.createTempDirectory("graft-skrh-ms").toString
     val dir = s"$tmp/out"
-    val sink = new UpsertJoin.ParquetUpsertSink(spark, dir, nBuckets = 4)
+    val sink = new UpsertJoin.ParquetUpsertSink(spark, dir, nBuckets = 4,
+      deltaCompactEvery = 0)
     sink.upsert("k", (0 until 40).map(i => (s"k$i", 1L, "a")).toDF("k", "ts", "p"))
     // widen ONE key's bucket with a new column — other buckets keep the
     // narrow schema, so the rebuild must read with schema merging
