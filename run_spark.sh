@@ -37,6 +37,9 @@ SHUFFLE_PARTITIONS="${GRAFT_SHUFFLE_PARTITIONS:-$((EXECUTORS * EXECUTOR_CORES * 
 # Durable checkpoint root for Structured Streaming (exactly-once; the
 # reference's --state-path). MUST be shared storage (HDFS/S3) on a real
 # cluster — a local path silently breaks recovery after node loss.
+# CrmlsStream.run writes a file: checkpoint through java.nio
+# (LocalCheckpointFileManager: no chmod process per log file); an
+# hdfs:/s3a: checkpoint goes through Hadoop's filesystem as before.
 CHECKPOINT_DIR="${GRAFT_CHECKPOINT_DIR:-file:///tmp/graft-checkpoints}"
 MASTER="${GRAFT_MASTER:-yarn}"
 

@@ -2390,6 +2390,16 @@ object CrmlsStream {
     * AvailableNow (drain-and-stop) by default for tests and backfills;
     * a continuous deployment passes `Trigger.ProcessingTime(...)`
     * (see CrmlsStreamMain).
+    *
+    * Unless the session already sets
+    * `spark.sql.streaming.checkpointFileManagerClass`, this sets it to
+    * [[LocalCheckpointFileManager]] on the session, so the offset log,
+    * the commit log and every file source's log write a local
+    * checkpoint through java.nio. Spark's default manager goes through
+    * Hadoop's local filesystem, which (without native libhadoop) starts
+    * a `chmod` process per checkpoint file: most of a small
+    * micro-batch's trigger overhead. A checkpoint on shared storage is
+    * written through Hadoop as before.
     */
   def run(tagged: DataFrame, store: StateStore, sink: UpsertJoin.UpsertSink,
           checkpointDir: String,
@@ -2397,7 +2407,11 @@ object CrmlsStream {
             sys.env.contains("SPARK_GRAFT_NARROW_SINK"),
           trigger: Trigger = Trigger.AvailableNow(),
           driverBatchMaxRows: Int = DriverBatchMaxRows,
-          driverAffectedMaxRows: Int = DriverAffectedMaxRows): StreamingQuery =
+          driverAffectedMaxRows: Int = DriverAffectedMaxRows): StreamingQuery = {
+    val conf = tagged.sparkSession.conf
+    if (conf.getOption(CheckpointFileManagerKey).isEmpty)
+      conf.set(CheckpointFileManagerKey,
+        classOf[LocalCheckpointFileManager].getName)
     tagged.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -2407,4 +2421,9 @@ object CrmlsStream {
       }
       .trigger(trigger)
       .start()
+  }
+
+  /** Spark's setting naming the streaming checkpoint's file manager. */
+  private[streaming] val CheckpointFileManagerKey =
+    "spark.sql.streaming.checkpointFileManagerClass"
 }

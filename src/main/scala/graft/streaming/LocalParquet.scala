@@ -1,11 +1,13 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.{LocalInputFile, LocalOutputFile, OutputFile}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.execution.datasources.parquet.{
@@ -35,11 +37,17 @@ import org.apache.spark.sql.types.StructType
   * takes the distributed frame path. Scope is deliberately single files
   * (append-file creation and footer schema reads) — no directory
   * semantics, no commit protocol (the caller owns markers/renames).
+  *
+  * Files are local paths, written and read through java.nio
+  * (parquet's [[LocalOutputFile]] / [[LocalInputFile]]), not Hadoop's
+  * local filesystem: without native libhadoop that one starts a `chmod`
+  * child process per created file and writes a `.crc` sidecar, which
+  * together cost more per file than encoding a small batch.
   */
 object LocalParquet {
 
-  private class RowBuilder(path: Path)
-      extends ParquetWriter.Builder[InternalRow, RowBuilder](path) {
+  private class RowBuilder(file: OutputFile)
+      extends ParquetWriter.Builder[InternalRow, RowBuilder](file) {
     override def self(): RowBuilder = this
     override def getWriteSupport(c: Configuration): WriteSupport[InternalRow] =
       new ParquetWriteSupport
@@ -95,21 +103,22 @@ object LocalParquet {
     * Spark job; this costs one footer read and no job.
     */
   def readSchema(spark: SparkSession, file: String): StructType = {
-    val conf = spark.sessionState.newHadoopConf()
-    val path = new Path(file)
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+    val reader = ParquetFileReader.open(new LocalInputFile(Paths.get(file)))
     try ParquetFileFormat.readSchemaFromFooter(
-      new Footer(path, reader.getFooter),
+      new Footer(new Path(file), reader.getFooter),
       new ParquetToSparkSchemaConverter(spark.sessionState.conf))
     finally reader.close()
   }
 
   /** Prepared-conf form of [[write]] — `conf` must come from
-    * [[prepareConf]] with the SAME schema.
+    * [[prepareConf]] with the SAME schema. Like Hadoop's create, it
+    * makes missing parent directories and refuses an existing `file`.
     */
   def write(rows: Iterator[Row], schema: StructType, file: String,
             conf: Configuration): Unit = {
-    val writer = new RowBuilder(new Path(file))
+    val path = Paths.get(file)
+    Files.createDirectories(path.toAbsolutePath.getParent)
+    val writer = new RowBuilder(new LocalOutputFile(path))
       .withConf(conf)
       .withCompressionCodec(
         CompressionCodecName.valueOf(conf.get("graft.parquet.codec")))

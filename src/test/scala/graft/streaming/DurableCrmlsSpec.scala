@@ -1,8 +1,10 @@
 package graft.streaming
 
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
+import graft.crmls.Crmls
 
 /** The streaming CRMLS job against the DURABLE parquet upsert sink:
   * state and output both survive a fresh reader, closing the loop on
@@ -18,7 +20,16 @@ class DurableCrmlsSpec extends SparkTestBase {
       s""""uc_valid_day":"1","uc_valid_ts":"$ts"}"""
   }
 
-  test("dimension update propagates into the durable parquet sink") {
+  /** Checkpoint files (offsets and commits) by log, names only. */
+  private def ckptFiles(ckpt: String): Set[String] =
+    Seq("offsets", "commits").flatMap(log =>
+      Option(new java.io.File(s"$ckpt/$log").list()).toSeq.flatten
+        .map(f => s"$log/$f")).toSet
+
+  /** Two runs over one checkpoint, the first under `firstManager`
+    * when given (else under run's own), the restart under run's.
+    */
+  private def restartCase(firstManager: Option[String]): Unit = {
     implicit val sqlCtx = spark.sqlContext
     val tmp = java.nio.file.Files.createTempDirectory("graft-durable").toString
     val store = new CrmlsStream.StateStore(spark, s"$tmp/state")
@@ -28,14 +39,22 @@ class DurableCrmlsSpec extends SparkTestBase {
       deltaCompactEvery = 0)
     val input = MemoryStream[(String, String)]
     val tagged = input.toDF().toDF("entity", "value")
+    val key = CrmlsStream.CheckpointFileManagerKey
 
-    input.addData(
+    val first = Seq(
       ("listings", env("L1", 100,
         """{"ListingKeyNumeric":"LK1","ListAgentKeyNumeric":"A1"}""")),
       ("agents", env("A1", 10, """{"n":"v1"}""")))
-    CrmlsStream.run(tagged, store, sink, s"$tmp/ckpt").awaitTermination()
+    input.addData(first: _*)
+    firstManager.foreach(spark.conf.set(key, _))
+    try CrmlsStream.run(tagged, store, sink, s"$tmp/ckpt").awaitTermination()
+    finally firstManager.foreach(_ => spark.conf.unset(key))
+    val firstFiles = ckptFiles(s"$tmp/ckpt")
+    assert(firstFiles.exists(_.endsWith(".crc")) === firstManager.isDefined,
+      s"$firstManager wrote $firstFiles")
 
-    input.addData(("agents", env("A1", 20, """{"n":"v2"}""")))
+    val update = Seq(("agents", env("A1", 20, """{"n":"v2"}""")))
+    input.addData(update: _*)
     CrmlsStream.run(tagged, store, sink, s"$tmp/ckpt").awaitTermination()
 
     // a completely fresh reader over the sink's bucket dirs (plain
@@ -43,7 +62,46 @@ class DurableCrmlsSpec extends SparkTestBase {
     val persisted = spark.read.parquet(s"$tmp/out/bucket_*")
       .select("l_uc_pk", "aa_uc_created_ts")
       .as[(String, Option[Long])].collect().toMap
-    assert(persisted === Map("L1" -> Some(20L)))
+    assert(persisted === Map("L1" -> Some(20L)), s"$firstManager")
+    val cols = Seq("l_uc_pk", "l_uc_created_ts", "aa_uc_pk",
+      "aa_uc_created_ts").map(col)
+    val byEntity = (first ++ update).groupBy(_._1).map { case (k, v) =>
+      k -> v.map(_._2).toDF("value") }
+    val expected = Crmls.pipeline(Crmls.allEntities.map(e => e.name ->
+        byEntity.getOrElse(e.name, Seq.empty[String].toDF("value"))).toMap)
+      .select(cols: _*).collect().toSet
+    assert(sink.snapshot(spark).select(cols: _*).collect().toSet === expected,
+      s"$firstManager")
+    // the restart's offsets and commits went through java.nio
+    val restartFiles = ckptFiles(s"$tmp/ckpt") -- firstFiles
+    assert(restartFiles.nonEmpty && !restartFiles.exists(_.endsWith(".crc")),
+      s"$firstManager: restart wrote $restartFiles")
+  }
+
+  test("dimension update propagates into the durable parquet sink") {
+    // the second input starts under Spark's default manager (Hadoop's
+    // checksummed writes) and restarts under run's
+    Seq(None, Some(classOf[FileContextBasedCheckpointFileManager].getName))
+      .foreach(restartCase)
+  }
+
+  test("run keeps a checkpoint file manager the session already sets") {
+    implicit val sqlCtx = spark.sqlContext
+    val tmp = java.nio.file.Files.createTempDirectory("graft-durable-fm")
+      .toString
+    val key = CrmlsStream.CheckpointFileManagerKey
+    val own = classOf[FileContextBasedCheckpointFileManager].getName
+    val input = MemoryStream[(String, String)]
+    input.addData(("agents", env("A1", 10, """{"n":"v1"}""")))
+    spark.conf.set(key, own)
+    try {
+      CrmlsStream.run(input.toDF().toDF("entity", "value"),
+        new CrmlsStream.StateStore(spark, s"$tmp/state"),
+        UpsertJoin.newInMemorySink(), s"$tmp/ckpt").awaitTermination()
+      assert(spark.conf.get(key) === own)
+      // the session's manager wrote the checkpoint: Hadoop's sidecars
+      assert(ckptFiles(s"$tmp/ckpt").exists(_.endsWith(".crc")))
+    } finally spark.conf.unset(key)
   }
 
   test("production stream with the retract log on: the changelog rides " +

@@ -17,6 +17,10 @@ class LocalParquetSpec extends SparkTestBase {
     StructField("__gen", LongType),
     StructField("__bucket", IntegerType)))
 
+  /** Files in `dir` named as Hadoop's checksum sidecars. */
+  private def crcFiles(dir: String): Seq[String] =
+    new java.io.File(dir).list().toSeq.filter(_.endsWith(".crc"))
+
   test("round-trips mixed-type rows including nulls through spark.read") {
     val tmp = java.nio.file.Files.createTempDirectory("lp").toString
     val rows = (0 until 1000).map { i =>
@@ -25,6 +29,11 @@ class LocalParquetSpec extends SparkTestBase {
         3L, i % 16)
     }.toArray
     LocalParquet.write(spark, rows.iterator, schema, s"$tmp/f.parquet")
+    assert(crcFiles(tmp).isEmpty)
+    // an existing file is refused, not overwritten (the read below
+    // still sees the first write)
+    intercept[java.nio.file.FileAlreadyExistsException](LocalParquet.write(
+      spark, rows.take(1).iterator, schema, s"$tmp/f.parquet"))
     val back = spark.read.parquet(s"$tmp/f.parquet")
     assert(back.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
       schema.fields.map(f => (f.name, f.dataType)).toSeq)
@@ -38,6 +47,7 @@ class LocalParquetSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("lp2").toString
     val rows = Array(Row("a", "p1", 1L, 0L, 3), Row("b", null, 2L, 0L, 7))
     LocalParquet.write(spark, rows.iterator, schema, s"$tmp/local/f.parquet")
+    assert(crcFiles(s"$tmp/local").isEmpty)
     import scala.jdk.CollectionConverters._
     spark.createDataFrame(rows.toSeq.asJava, schema)
       .coalesce(1).write.parquet(s"$tmp/job")
