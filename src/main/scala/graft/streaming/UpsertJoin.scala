@@ -522,6 +522,14 @@ object UpsertJoin {
     // force a compaction on the first append after a restart that found
     // pending deltas — their touched-bucket set is no longer known
     private var sinceCompact: Int = if (gen > 0L) compactEvery else 0
+    /** Buckets the pending generations touch, when this instance wrote
+      * every one of them through the driver path, which computes each
+      * row's bucket itself. None once a generation's buckets are not
+      * known here (a frame append, or generations found at start); the
+      * compaction then collects them from the generation files.
+      */
+    private var pendingBuckets: Option[Set[Int]] =
+      if (gen > 0L) None else Some(Set.empty)
 
     override def bucketCount: Option[Int] = Some(curBuckets)
 
@@ -650,15 +658,17 @@ object UpsertJoin {
         if (!keyUnique || isLocalBatch) stamped.coalesce(1)
         else stamped.repartition(1)
       oneFile.write.mode("overwrite").parquet(s"$deltaDir/g$gen")
-      commitGen(keyCol)
+      commitGen(keyCol, buckets = None)
     }
 
-    /** Shared post-append bookkeeping: advance the generation counter
-      * and, in the append that fills the window, compact it inline.
-      * (An off-thread compaction kept a window's sort pages on the heap
+    /** Shared post-append bookkeeping: record the generation's buckets
+      * (None = not known here), advance the generation counter and, in
+      * the append that fills the window, compact it inline. (An
+      * off-thread compaction kept a window's sort pages on the heap
       * while it ran, which made the retained heap bimodal.)
       */
-    private def commitGen(keyCol: String): Unit = {
+    private def commitGen(keyCol: String, buckets: Option[Set[Int]]): Unit = {
+      pendingBuckets = for (p <- pendingBuckets; b <- buckets) yield p ++ b
       gen += 1
       sinceCompact += 1
       if (sinceCompact >= compactEvery) {
@@ -736,27 +746,27 @@ object UpsertJoin {
             org.apache.spark.sql.types.IntegerType)))
       val ki = schema.fieldIndex(keyCol)
       val g = gen
-      def stamp(r: Row): Row = {
-        val key = if (r.isNullAt(ki)) null else r.getString(ki)
-        // Seq[Any] on purpose: Seq(long, int) would HARMONIZE to
-        // Seq[Long], silently widening the bucket int out of its
-        // declared IntegerType
-        Row.fromSeq(r.toSeq ++
-          Seq[Any](g, BucketedState.bucketOfLocal(key, curBuckets)))
-      }
+      val buckets = rows.map(r => BucketedState.bucketOfLocal(
+        if (r.isNullAt(ki)) null else r.getString(ki), curBuckets))
+      // Seq[Any] on purpose: Seq(long, int) would HARMONIZE to
+      // Seq[Long], silently widening the bucket int out of its declared
+      // IntegerType
+      def stamp(r: Row, b: Int): Row = Row.fromSeq(r.toSeq ++ Seq[Any](g, b))
       // a gen dir may hold several part files (compaction reads the
       // dir) — chunk large deltas across the common pool; _SUCCESS
       // lands only after every part is durable
       val conf = LocalParquet.prepareConf(spark, outSchema)
-      val chunks = rows.grouped(8192).zipWithIndex.toSeq
+      val chunk = 8192
+      val chunks = rows.grouped(chunk).zipWithIndex.toSeq
       import scala.jdk.CollectionConverters._
-      chunks.asJava.parallelStream().forEach { case (chunk, i) =>
-        LocalParquet.write(chunk.iterator.map(stamp), outSchema,
+      chunks.asJava.parallelStream().forEach { case (part, i) =>
+        LocalParquet.write(part.iterator.zipWithIndex.map { case (r, j) =>
+            stamp(r, buckets(i * chunk + j)) }, outSchema,
           genDir.resolve(f"part-$i%05d.parquet").toString, conf)
       }
       java.nio.file.Files.write(genDir.resolve("_SUCCESS"),
         Array.empty[Byte])
-      commitGen(keyCol)
+      commitGen(keyCol, Some(buckets.toSet))
     }
 
     /** Parquet part files directly under `d` (none if `d` is absent). */
@@ -942,13 +952,23 @@ object UpsertJoin {
       * EXACTLY the generation dirs it was given, only after the bucket
       * swaps promote — a crash in between replays the compacted deltas
       * onto the already-merged base, where latest-wins makes the replay
-      * a no-op.
+      * a no-op. The generations' schemas come from their footers and
+      * their buckets from [[pendingBuckets]] where known, so the
+      * whole-row fold opens no frame per generation and runs no job
+      * before its one merge-and-write.
       */
     private def compact(keyCol: String, gens: Seq[java.io.File]): Unit = {
-      val gdfs = genFrames(gens)
-      val genFields = gdfs.map { case (_, df) => rowFields(df.schema) }
-      val touched = gdfs.map(_._2.select(col(BucketedState.BucketColName)))
-        .reduce(_ union _).distinct().collect().map(_.getInt(0)).toSeq.sorted
+      lazy val gdfs = genFrames(gens)
+      // one footer per generation, read in parallel on the common pool
+      import scala.jdk.CollectionConverters._
+      val schemas = gens.asJava.parallelStream()
+        .map[org.apache.spark.sql.types.StructType](genSchema(_))
+        .toList.asScala.toSeq
+      val genFields = schemas.map(rowFields)
+      val touched = pendingBuckets.map(_.toSeq.sorted).getOrElse(
+        gdfs.map(_._2.select(col(BucketedState.BucketColName)))
+          .reduce(_ union _).distinct().collect().map(_.getInt(0)).toSeq
+          .sorted)
       val baseDf = BucketedState.readBuckets(spark, dir, touched, None)
       val uniform = genFields.map(_.map(_.name)).distinct.size == 1 &&
         baseDf.forall(b =>
@@ -957,7 +977,7 @@ object UpsertJoin {
         // every generation (and the base) carries the same columns:
         // the original whole-row latest-wins merge — ONE multi-path
         // read with a known schema, one window
-        val del = spark.read.schema(gdfs.head._2.schema)
+        val del = spark.read.schema(schemas.head)
           .parquet(gens.map(_.getPath): _*)
         val all = baseDf.map(_.withColumn("__gen", lit(-1L))
             .withColumn(BucketedState.BucketColName,
@@ -1003,6 +1023,7 @@ object UpsertJoin {
       BucketedState.overwriteBuckets(spark, dir, out, touched)
       Option(compactFailpoint.get()).foreach(_())
       gens.foreach(g => BucketedState.deleteRecursively(g.toPath))
+      pendingBuckets = Some(Set.empty)
       clEpoch.foreach(maybeChangelogCheckpoint)
     }
 

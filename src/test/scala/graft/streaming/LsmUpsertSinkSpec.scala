@@ -191,5 +191,47 @@ class LsmUpsertSinkSpec extends SparkTestBase {
     val reopened = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/r", 4,
       deltaCompactEvery = 3)
     assert(rowsOf(reopened) === rowsOf(viaFrame))
+
+    // windows mixing both forms, keys in three different buckets: the
+    // sink knows the buckets of its driver-array generations; a frame
+    // generation's, or those pending across a restart, the compaction
+    // must find in the generation files
+    def bucket(k: String) = BucketedState.bucketOfLocal(k, 4)
+    val keys = ('a' to 'z').map(_.toString)
+    val a = keys.head
+    val b = keys.find(k => bucket(k) != bucket(a)).get
+    val c = keys.find(k => !Set(a, b).map(bucket).contains(bucket(k))).get
+    val merge = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/m", 4,
+      deltaCompactEvery = 0)
+    val mixed = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/x", 4,
+      deltaCompactEvery = 3)
+    def rows(sink: UpsertJoin.ParquetUpsertSink,
+             rs: (String, Int, String)*): Unit =
+      sink.upsertPreparedRowsUnique(spark, "k", batchDf(rs).collect(), schema,
+        0 until 4)
+    def both(append: UpsertJoin.ParquetUpsertSink => Unit): Unit = {
+      append(merge); append(mixed)
+    }
+    assert(compactions {
+      both(rows(_, (a, 1, "w1")))
+      both(_.upsertPreparedUnique("k", batchDf(Seq((b, 1, "w1"))), 0 until 4))
+      both(rows(_, (a, 2, "w1")))
+    } === 1)
+    assert(rowsOf(mixed) === rowsOf(merge), "window with a frame append")
+    assert(compactions {
+      both(rows(_, (a, 3, "w2"), (c, 1, "w2")))
+      both(rows(_, (b, 2, "w2")))
+      both(rows(_, (a, 4, "w2")))
+    } === 1)
+    assert(rowsOf(mixed) === rowsOf(merge), "window of driver-array appends")
+    both(rows(_, (a, 5, "w3")))
+    both(rows(_, (b, 3, "w3")))
+    val restarted = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/x", 4,
+      deltaCompactEvery = 3)
+    rows(merge, (c, 2, "w3"))
+    assert(compactions(rows(restarted, (c, 2, "w3"))) === 1)
+    assert(new java.io.File(s"$tmp/x/__delta").listFiles()
+      .forall(!_.getName.startsWith("g")), "the fold cleared the generations")
+    assert(rowsOf(restarted) === rowsOf(merge), "fold after a restart")
   }
 }
