@@ -87,24 +87,36 @@ object BucketedState {
   }
 
   /** Read only the given buckets' current rows (None if none exist —
-    * e.g. the very first batch). Pass `schema` when the table's shape is
-    * statically known: it skips parquet footer schema inference — a
-    * per-read driver job that dominates micro-batch latency when every
-    * batch re-opens several state tables. Files carrying extra columns
+    * e.g. the very first batch). Neither form runs a Spark job to plan
+    * the read. `schema` only shapes it: files carrying extra columns
     * (the union-schema writes of [[overwriteEntityBuckets]]) are
-    * column-pruned to the schema; files missing a schema column read it
-    * as null.
+    * column-pruned to it, and files missing one of its columns read it
+    * as null. Without it, the read takes the merge of the footers of
+    * the bucket files it opens ([[graft.sources.ParquetFooters]]), so a
+    * column that only some buckets carry (a partial upsert widens only
+    * the buckets it touches) survives.
     */
   def readBuckets(spark: SparkSession, dir: String, buckets: Seq[Int],
                   schema: Option[StructType] = None): Option[DataFrame] = {
     recover(dir)
-    val existing = buckets.distinct.filter(b => Files.exists(bucketDir(dir, b)))
+    val existing = buckets.distinct.map(b => bucketDir(dir, b))
+      .filter(Files.exists(_))
     if (existing.isEmpty) None
     else {
-      val reader = schema.fold(spark.read)(s => spark.read.schema(s))
-      Some(reader.parquet(existing.map(b => bucketDir(dir, b).toString): _*))
+      val s = schema.getOrElse(graft.sources.ParquetFooters.schema(spark,
+        existing.flatMap(d => partFiles(d.toFile)).map(_.getPath)))
+      Some(spark.read.schema(s).parquet(existing.map(_.toString): _*))
     }
   }
+
+  /** Parquet part files directly under `d` (none if `d` is absent),
+    * hidden (`.`/`_`) names skipped.
+    */
+  private[streaming] def partFiles(d: java.io.File): Seq[java.io.File] =
+    Option(d.listFiles()).toSeq.flatten
+      .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
+        !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .sortBy(_.getName)
 
   /** Full-state read across every bucket. */
   def readAll(spark: SparkSession, dir: String,

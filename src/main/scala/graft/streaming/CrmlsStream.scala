@@ -706,7 +706,8 @@ object CrmlsStream {
         val keyCol = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(pendingPath(entity), ".keycol")),
           java.nio.charset.StandardCharsets.UTF_8)
-        val inferred = spark.read.parquet(gens.map(_.getPath): _*).schema
+        val inferred = graft.sources.ParquetFooters.schema(spark,
+          gens.flatMap(BucketedState.partFiles).map(_.getPath))
         val schema = StructType(inferred.fields.filterNot(f =>
           f.name == "__gen" || f.name == BucketedState.BucketColName))
         ensureFolded(entity, schema, keyCol)

@@ -3,15 +3,13 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetWriter}
+import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.io.{LocalInputFile, LocalOutputFile, OutputFile}
+import org.apache.parquet.io.{LocalOutputFile, OutputFile}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.execution.datasources.parquet.{
-  ParquetFileFormat, ParquetToSparkSchemaConverter, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
@@ -34,15 +32,15 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale posture: this is a DRIVER fast path for delta-sized batches
   * (bounded by the caller's driver-tier row caps); anything larger
-  * takes the distributed frame path. Scope is deliberately single files
-  * (append-file creation and footer schema reads) — no directory
-  * semantics, no commit protocol (the caller owns markers/renames).
+  * takes the distributed frame path. Scope is deliberately single-file
+  * creation — no directory semantics, no commit protocol (the caller
+  * owns markers/renames).
   *
-  * Files are local paths, written and read through java.nio
-  * (parquet's [[LocalOutputFile]] / [[LocalInputFile]]), not Hadoop's
-  * local filesystem: without native libhadoop that one starts a `chmod`
-  * child process per created file and writes a `.crc` sidecar, which
-  * together cost more per file than encoding a small batch.
+  * Files are local paths, written through java.nio (parquet's
+  * [[LocalOutputFile]]), not Hadoop's local filesystem: without native
+  * libhadoop that one starts a `chmod` child process per created file
+  * and writes a `.crc` sidecar, which together cost more per file than
+  * encoding a small batch.
   */
 object LocalParquet {
 
@@ -94,20 +92,6 @@ object LocalParquet {
         case _: IllegalArgumentException => CompressionCodecName.SNAPPY.name()
       })
     conf
-  }
-
-  /** Spark schema of one parquet file, read from its footer on the
-    * driver with Spark's own footer logic (the stored row metadata, or
-    * the parquet type conversion when a file carries none). A
-    * schema-less `spark.read.parquet` infers the same schema through a
-    * Spark job; this costs one footer read and no job.
-    */
-  def readSchema(spark: SparkSession, file: String): StructType = {
-    val reader = ParquetFileReader.open(new LocalInputFile(Paths.get(file)))
-    try ParquetFileFormat.readSchemaFromFooter(
-      new Footer(new Path(file), reader.getFooter),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-    finally reader.close()
   }
 
   /** Prepared-conf form of [[write]] — `conf` must come from

@@ -724,7 +724,7 @@ object UpsertJoin {
         spark: SparkSession, keyCol: String, rows: Array[Row],
         schema: org.apache.spark.sql.types.StructType): Unit = {
       // an empty batch MUST NOT commit a generation: zero part files
-      // under a _SUCCESS marker would fail genFrames' schema inference
+      // under a _SUCCESS marker would fail the generation's footer read
       // and permanently brick every later compaction/snapshot (the
       // frame path is immune — Spark writes a schema-only part file)
       if (rows.isEmpty) return
@@ -769,27 +769,27 @@ object UpsertJoin {
       commitGen(keyCol, Some(buckets.toSet))
     }
 
-    /** Parquet part files directly under `d` (none if `d` is absent). */
-    private def partFiles(d: java.io.File): Seq[java.io.File] =
-      Option(d.listFiles()).toSeq.flatten
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .sortBy(_.getName)
-
-    /** Spark schema of a committed generation, from its first part
-      * file's footer — read on the driver, no inference job. The footer
-      * is the one presence record that survives restarts: no in-memory
-      * schema cache can say which columns a pre-crash partial append
-      * carried.
+    /** Spark schema of each committed generation, from its first part
+      * file's footer — all read in one parallel driver pass, no
+      * inference job. The footer is the one presence record that
+      * survives restarts: no in-memory schema cache can say which
+      * columns a pre-crash partial append carried.
       */
-    private def genSchema(g: java.io.File): org.apache.spark.sql.types.StructType =
-      LocalParquet.readSchema(spark, partFiles(g).head.getPath)
+    private def genSchemas(gens: Seq[java.io.File])
+        : Seq[org.apache.spark.sql.types.StructType] =
+      graft.sources.ParquetFooters.schemas(spark,
+        gens.map(g => BucketedState.partFiles(g).head.getPath))
 
     /** Committed generations as (generation number, frame), each read
-      * with its footer schema.
+      * with its schema from [[genSchemas]].
       */
-    private def genFrames(gens: Seq[java.io.File]): Seq[(Long, DataFrame)] =
-      gens.map(g => (g.getName.stripPrefix("g").toLong,
-        spark.read.schema(genSchema(g)).parquet(g.getPath)))
+    private def genFrames(gens: Seq[java.io.File],
+        schemas: Seq[org.apache.spark.sql.types.StructType])
+        : Seq[(Long, DataFrame)] =
+      gens.zip(schemas).map { case (g, s) =>
+        (g.getName.stripPrefix("g").toLong,
+          spark.read.schema(s).parquet(g.getPath))
+      }
 
     private def rowFields(s: org.apache.spark.sql.types.StructType)
         : Seq[org.apache.spark.sql.types.StructField] =
@@ -958,12 +958,8 @@ object UpsertJoin {
       * before its one merge-and-write.
       */
     private def compact(keyCol: String, gens: Seq[java.io.File]): Unit = {
-      lazy val gdfs = genFrames(gens)
-      // one footer per generation, read in parallel on the common pool
-      import scala.jdk.CollectionConverters._
-      val schemas = gens.asJava.parallelStream()
-        .map[org.apache.spark.sql.types.StructType](genSchema(_))
-        .toList.asScala.toSeq
+      val schemas = genSchemas(gens)
+      lazy val gdfs = genFrames(gens, schemas)
       val genFields = schemas.map(rowFields)
       val touched = pendingBuckets.map(_.toSeq.sorted).getOrElse(
         gdfs.map(_._2.select(col(BucketedState.BucketColName)))
@@ -1218,7 +1214,8 @@ object UpsertJoin {
         // swap just applied batch e's merge (in delta mode, the
         // compaction that emitted e folded every pending generation).
         val parts = BucketedState.listBuckets(dir).flatMap(b =>
-          partFiles(new java.io.File(dir, s"bucket_$b")).map(f => (b, f)))
+          BucketedState.partFiles(new java.io.File(dir, s"bucket_$b"))
+            .map(f => (b, f)))
         if (parts.nonEmpty) {
           tmp.mkdirs()
           parts.foreach { case (b, f) =>
@@ -1358,10 +1355,10 @@ object UpsertJoin {
       mark("marked")
       val buckets = BucketedState.listBuckets(dir)
       if (buckets.nonEmpty) {
-        // mergeSchema: bucket files can disagree on columns after
-        // partial upserts widened only the buckets they touched
-        val df = spark.read.option("mergeSchema", "true")
-          .parquet(buckets.map(b => s"$dir/bucket_$b"): _*)
+        // the read merges every bucket's footer: bucket files can
+        // disagree on columns after partial upserts widened only the
+        // buckets they touched
+        val df = BucketedState.readBuckets(spark, dir, buckets).get
         val out = df.withColumn(BucketedState.BucketColName,
           BucketedState.bucketOf(col(keyCol), n2))
         val fresh = s"$dir.rehash"
@@ -1429,14 +1426,15 @@ object UpsertJoin {
         val keyPath = java.nio.file.Paths.get(deltaDir, ".keycol")
         val keyCol = new String(java.nio.file.Files.readAllBytes(keyPath),
           java.nio.charset.StandardCharsets.UTF_8)
-        val gdfs = genFrames(gens)
-        val genFields = gdfs.map { case (_, df) => rowFields(df.schema) }
+        val schemas = genSchemas(gens)
+        lazy val gdfs = genFrames(gens, schemas)
+        val genFields = schemas.map(rowFields)
         val uniform = genFields.map(_.map(_.name)).distinct.size == 1 &&
           base.forall(b =>
             rowFields(b.schema).map(_.name) == genFields.head.map(_.name))
         if (uniform) {
           import org.apache.spark.sql.expressions.Window
-          val d = spark.read.schema(gdfs.head._2.schema)
+          val d = spark.read.schema(schemas.head)
             .parquet(gens.map(_.getPath): _*)
             .drop(BucketedState.BucketColName)
           val all = base.map(_.withColumn("__gen", lit(-1L)))

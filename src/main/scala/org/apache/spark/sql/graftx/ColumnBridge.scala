@@ -28,6 +28,17 @@ object ColumnBridge {
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .logicalPlan
 
+  /** `left` merged with `right` exactly as parquet `mergeSchema` merges
+    * two files' schemas (`StructType.merge` is private[sql]): fields by
+    * name in first-seen order, nested structs merged, a type conflict
+    * refused.
+    */
+  def mergeSchemas(left: org.apache.spark.sql.types.StructType,
+                   right: org.apache.spark.sql.types.StructType,
+                   caseSensitive: Boolean)
+      : org.apache.spark.sql.types.StructType =
+    left.merge(right, caseSensitive)
+
   /** Reliable-checkpoint directory backing a Dataset returned by
     * `Dataset.checkpoint()` — the LogicalRDD leaf's RDD checkpoint
     * file. None for un-checkpointed frames and for localCheckpoint

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graftx.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,4 +19,20 @@ trait SparkTestBase extends AnyFunSuite {
     .getOrCreate()
 
   def sf(dir: String = "sf0.001") = s"/root/testdata/$dir"
+
+  /** Spark jobs started while `body` runs (AQE stages and broadcasts
+    * count, as they do in a traced run).
+    */
+  def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    ListenerBusBridge.drain(sc)
+    sc.addSparkListener(counter)
+    try { body; ListenerBusBridge.drain(sc); n.get }
+    finally sc.removeSparkListener(counter)
+  }
 }

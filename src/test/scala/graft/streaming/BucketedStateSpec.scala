@@ -62,6 +62,27 @@ class BucketedStateSpec extends SparkTestBase {
     assert(got.size === 20)
   }
 
+  test("readBuckets without a schema merges the bucket footers and starts no job") {
+    val tmp = Files.createTempDirectory("graft-bucketed-footers").toString
+    val narrow = Seq(("a", 1L)).toDF("k", "ts")
+    val wide = Seq(("b", 2L, "x")).toDF("k", "ts", "extra")
+    BucketedState.overwriteBucketsLocal(spark, tmp,
+      Map(0 -> narrow.collect()), narrow.schema)
+    BucketedState.overwriteBucketsLocal(spark, tmp,
+      Map(3 -> wide.collect()), wide.schema)
+    var read: Option[org.apache.spark.sql.DataFrame] = None
+    assert(jobsIn {
+      read = BucketedState.readBuckets(spark, tmp, Seq(0, 3), None)
+    } === 0)
+    assert(read.get.schema.fieldNames.toSeq === Seq("k", "ts", "extra"))
+    assert(read.get.as[(String, Long, Option[String])].collect().toSet ===
+      Set(("a", 1L, None), ("b", 2L, Some("x"))))
+    assert(BucketedState.readAll(spark, tmp).get.columns.contains("extra"))
+    // a schema still shapes the read: extra columns are pruned
+    assert(BucketedState.readBuckets(spark, tmp, Seq(0, 3),
+      Some(narrow.schema)).get.columns.toSeq === Seq("k", "ts"))
+  }
+
   test("ParquetUpsertSink rewrites only touched buckets, batch wins") {
     val nBuckets = 8
     val dir = Files.createTempDirectory("graft-bucketed-sink").toString + "/t"

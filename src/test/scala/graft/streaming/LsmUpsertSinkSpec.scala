@@ -120,6 +120,58 @@ class LsmUpsertSinkSpec extends SparkTestBase {
     assert(rowsOf(mixed) === rowsOf(mergeMixed), "mixed column sets")
   }
 
+  /** Three windows over 4 buckets: every key with (k, ts, p); `extra`
+    * added to one key of bucket 3 only; then an update of a key in
+    * bucket 0 and of the bucket-3 key. Bucket files sort bucket_0 before
+    * bucket_3, so a base read that took its schema from the first file
+    * alone would rewrite bucket 3 without `extra`.
+    */
+  private def widenOneBucket(deltaCompactEvery: Int): Unit = {
+    def bucket(k: String) = BucketedState.bucketOfLocal(k, 4)
+    val keys = (0 until 40).map(i => s"k$i")
+    val k0 = keys.find(bucket(_) == 0).get
+    val k3 = keys.find(bucket(_) == 3).get
+    val tmp = java.nio.file.Files.createTempDirectory("graft-lsm-wide").toString
+    val sink = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/s", 4,
+      deltaCompactEvery = deltaCompactEvery)
+    sink.upsert("k", keys.map(k => (k, 1L, "p1")).toDF("k", "ts", "p"))
+    sink.upsertPartialUnique("k", Seq((k3, "x")).toDF("k", "extra"), Seq(3))
+    val update = Seq((k0, 2L, "p2"), (k3, 2L, "p2")).toDF("k", "ts", "p")
+    // delta mode folds a full-row generation; merge-on-write merges a
+    // batch carrying every base column through the partial form
+    if (deltaCompactEvery > 0) sink.upsert("k", update)
+    else sink.upsertPartialUnique("k", update, Seq(0, 3))
+    val snap = sink.snapshot(spark)
+    assert(snap.columns.contains("extra"))
+    assert(snap.select("k", "ts", "p", "extra")
+      .as[(String, Long, String, Option[String])]
+      .collect().filter(r => r._1 == k0 || r._1 == k3).toSet ===
+      Set((k0, 2L, "p2", None), (k3, 2L, "p2", Some("x"))))
+  }
+
+  test("a compaction keeps a column only some of its buckets carry") {
+    widenOneBucket(deltaCompactEvery = 1)
+  }
+
+  test("a merge-on-write partial merge keeps a column only some of its buckets carry") {
+    widenOneBucket(deltaCompactEvery = 0)
+  }
+
+  test("a forced compaction plans its base read without a job") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-lsm-jobs").toString
+    val sink = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/s", 4,
+      deltaCompactEvery = 100)
+    val schema = batchDf(batches.head).schema
+    batches.foreach(b => sink.upsertPreparedRowsUnique(spark, "k",
+      batchDf(b).collect(), schema, 0 until 4))
+    sink.forceCompact("k")
+    batches.foreach(b => sink.upsertPreparedRowsUnique(spark, "k",
+      batchDf(b).collect(), schema, 0 until 4))
+    // the merge-and-write's jobs only: the base read takes its schema
+    // from the bucket footers
+    assert(jobsIn(sink.forceCompact("k")) === 3)
+  }
+
   test("appends between compactions write only delta files") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-lsm2").toString
     val sink = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/s", 4,
