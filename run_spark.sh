@@ -59,6 +59,10 @@ exec "${SPARK_HOME:-/opt/spark}"/bin/spark-submit \
   --conf spark.sql.adaptive.skewJoin.enabled=true \
   --conf spark.sql.session.timeZone=UTC \
   --conf spark.sql.legacy.parquet.nanosAsLong=true \
+  `# generated-code cache: GraftExtensions sets it on the driver, but` \
+  `# executors read their conf at launch; keep equal to` \
+  `# GraftExtensions.CodegenCacheMaxEntries (RunSparkScriptSpec checks)` \
+  --conf spark.sql.codegen.cache.maxEntries=4096 \
   `# ---- scan sizing: keep input splits near the 128M sweet spot ----` \
   --conf spark.sql.files.maxPartitionBytes=134217728 \
   `# ---- streaming state (reference: flink-conf.yaml RocksDB block) ----` \

@@ -1,11 +1,30 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.graftx.ColumnBridge
 import graft.functions.NativeExpressions
 
 /** SparkSessionExtensions entry point: registers the engine's native
   * expressions as SQL functions so `spark.sql` users get them too
-  * (`graft_dot`, `graft_minhash`, `graft_simhash`).
+  * (`graft_dot`, `graft_minhash`, `graft_simhash`), plans the as-of
+  * join, and sizes Spark's generated-code cache to the engine's working
+  * set.
+  *
+  * The code cache (`spark.sql.codegen.cache.maxEntries`, Spark's default
+  * 100) is one LRU per JVM, sized once by the JVM's first code
+  * generation. A pass over the catalog's reference-operator rows cycles
+  * more distinct generated classes than 100 through it, so each one is
+  * evicted before it is reused and every warm pass recompiles nearly all of
+  * them with Janino, although the generated code is the same each time.
+  * `apply` therefore sets the key to [[GraftExtensions.CodegenCacheMaxEntries]]
+  * on the active SparkContext's conf, unless the conf already sets it
+  * (an explicit value wins). This takes effect only when the extension
+  * is loaded through `spark.sql.extensions`: `getOrCreate` then applies
+  * it after the context exists and before the session's shared state
+  * copies the static confs, which in a JVM whose first session loads the
+  * extension is before any code generation. `.withExtensions` runs
+  * before a context exists and leaves the cache at Spark's default, as
+  * does a JVM that generated code before its first such session.
   *
   * Usage:
   * {{{
@@ -13,10 +32,12 @@ import graft.functions.NativeExpressions
   *   .config("spark.sql.extensions", "graft.GraftExtensions")
   *   ...
   * }}}
-  * or `.withExtensions(new GraftExtensions)`.
+  * or `.withExtensions(new GraftExtensions)` (functions and planner only).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ColumnBridge.setContextConfIfMissing(GraftExtensions.CodegenCacheKey,
+      GraftExtensions.CodegenCacheMaxEntries.toString)
     GraftExtensions.definitions.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinPlan.AsOfJoinStrategy)
   }
@@ -26,6 +47,19 @@ object GraftExtensions {
   import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.catalyst.FunctionIdentifier
   import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+
+  /** Spark's static conf that sizes the JVM-wide generated-code cache. */
+  val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** Generated-code cache entries: the next power of two above the most
+    * distinct classes one JVM compiled, 2,441 in one pass over every
+    * `SparkEntry.queries` row at sf0.001 (a `live_listing`-shaped
+    * `CrmlsStream.run` compiles 105). An entry retains ~20-30 KB of
+    * heap, so a full cache holds ~80-120 MB; the cache only grows to the
+    * classes a JVM actually compiles (see BASELINE.md). `run_spark.sh`
+    * passes the same value to executors at submit time.
+    */
+  val CodegenCacheMaxEntries = 4096
 
   private def info(name: String, usage: String) =
     new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "scala_udf")

@@ -545,26 +545,25 @@ object UpsertJoin {
           val touched = cached
             .select(BucketedState.bucketOf(col(keyCol), curBuckets).as("__b"))
             .distinct().collect().map(_.getInt(0)).toSeq.sorted
-          mergeWrite(keyCol, cached, touched, readSchema = None)
+          mergeWrite(keyCol, cached, touched)
         } finally cached.unpersist()
       }
 
-    /** Precomputed-bucket path: no discovery collect, and the current
-      * sink rows are read with the batch's schema (the merge schema by
-      * construction) — zero inference jobs, ONE write job per batch.
+    /** Precomputed-bucket path: no discovery collect, ONE write job per
+      * batch.
       */
     override def upsertPrepared(keyCol: String, batch: DataFrame,
                                 touched: Seq[Int]): Unit =
       if (touched.nonEmpty) {
         if (compactEvery > 0) appendDelta(keyCol, batch)
-        else mergeWrite(keyCol, batch, touched.sorted, Some(batch.schema))
+        else mergeWrite(keyCol, batch, touched.sorted)
       }
 
     override def upsertPreparedUnique(keyCol: String, batch: DataFrame,
                                       touched: Seq[Int]): Unit =
       if (touched.nonEmpty) {
         if (compactEvery > 0) appendDelta(keyCol, batch, keyUnique = true)
-        else mergeWrite(keyCol, batch, touched.sorted, Some(batch.schema))
+        else mergeWrite(keyCol, batch, touched.sorted)
       }
 
     /** Column-narrowed upsert (trait contract). Delta mode appends the
@@ -1065,14 +1064,30 @@ object UpsertJoin {
       clEpoch.foreach(maybeChangelogCheckpoint)
     }
 
+    /** Full-row merge of `batch` into the touched buckets: latest wins
+      * per key, the batch over the current rows. Columns the touched
+      * buckets carry and the batch lacks (a partial upsert widened
+      * them) keep their current values for the batch's keys, as delta
+      * mode's fold ([[applyLatest]]) keeps them; columns only the batch
+      * carries read NULL for the keys it does not touch.
+      */
     private def mergeWrite(keyCol: String, batch: DataFrame,
-                           touched: Seq[Int],
-                           readSchema: Option[org.apache.spark.sql.types.StructType]): Unit = {
+                           touched: Seq[Int]): Unit = {
       def tagged(df: DataFrame, isNew: Int) = df.withColumn("__tie",
         struct(lit(isNew), xxhash64(struct(df.columns.map(col): _*))))
-      val cur = BucketedState.readBuckets(spark, dir, touched, readSchema)
+      val cur = BucketedState.readBuckets(spark, dir, touched)
       val all = cur match {
-        case Some(c) => tagged(c, 0).unionByName(tagged(batch, 1))
+        case Some(c) =>
+          val batchCols = batch.columns.toSet
+          val kept = c.columns.filterNot(n =>
+            batchCols(n) || n == BucketedState.BucketColName)
+          val b = tagged(batch, 1)
+          val wide =
+            if (kept.isEmpty) b
+            else b.join(c.select((keyCol +: kept).map(col): _*),
+                Seq(keyCol), "left")
+              .select((b.columns ++ kept).map(col): _*)
+          wide.unionByName(tagged(c, 0), allowMissingColumns = true)
         case None => tagged(batch, 1)
       }
       val w = Window.partitionBy(col(keyCol)).orderBy(col("__tie").desc)
@@ -1120,7 +1135,10 @@ object UpsertJoin {
             .parquet(tmp.toString)
             .select(merged.columns.filter(_ != BucketedState.BucketColName)
               .map(col): _*)
-          val clEpoch = emitChangelog(clDir, keyCol, cur, mergedBack, batch)
+          // pre-images padded to the merged columns (the batch may
+          // carry columns the touched buckets lack)
+          val clEpoch = emitChangelog(clDir, keyCol,
+            cur.map(alignTo(_, rowFields(merged.schema))), mergedBack, batch)
           BucketedState.promoteBuckets(dir, touched)
           maybeChangelogCheckpoint(clEpoch)
       }

@@ -39,6 +39,13 @@ object ColumnBridge {
       : org.apache.spark.sql.types.StructType =
     left.merge(right, caseSensitive)
 
+  /** Set `key` on the active SparkContext's conf unless it is already
+    * set (`SparkContext.conf` and `getActive` are private[spark]); a
+    * no-op when no context exists yet.
+    */
+  def setContextConfIfMissing(key: String, value: String): Unit =
+    org.apache.spark.SparkContext.getActive.foreach(_.conf.setIfMissing(key, value))
+
   /** Reliable-checkpoint directory backing a Dataset returned by
     * `Dataset.checkpoint()` — the LogicalRDD leaf's RDD checkpoint
     * file. None for un-checkpointed frames and for localCheckpoint

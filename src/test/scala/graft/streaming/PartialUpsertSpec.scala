@@ -189,6 +189,46 @@ class PartialUpsertSpec extends SparkTestBase {
       "compaction must consume all pending generations")
   }
 
+  test("a full-row upsert keeps a column a partial upsert added to its bucket") {
+    // merge-on-write must agree with delta mode's fold: a full-row
+    // update of a key whose bucket a partial upsert widened keeps the
+    // wider column's value, through both the discovering upsert and
+    // the precomputed-bucket path
+    val schema = StructType(Seq(StructField("k", StringType),
+      StructField("ts", LongType), StructField("p", StringType)))
+    val keys = (0 until 16).map(i => s"w$i")
+    assert(keys.map(BucketedState.bucketOfLocal(_, 4)).distinct.size === 4)
+    val hot = keys.find(BucketedState.bucketOfLocal(_, 4) == 3).get
+    def rows(ks: Seq[String], ts: Long) =
+      df(schema, ks.map(k => Row(k, ts, s"$k@$ts")))
+    val widen = df(StructType(Seq(StructField("k", StringType),
+      StructField("extra", StringType))), Seq(Row(hot, "x")))
+    def run(compactEvery: Int, prepared: Boolean) = {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-pu-wide").toString
+      val sink = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/s", 4,
+        deltaCompactEvery = compactEvery)
+      sink.upsert("k", rows(keys, 1L))
+      sink.upsertPartialUnique("k", widen, Seq(3))
+      val update = rows(Seq(hot), 2L)
+      if (prepared) sink.upsertPrepared("k", update, Seq(3))
+      else sink.upsert("k", update)
+      val snap = sink.snapshot(spark)
+      assert(snap.columns.contains("extra"),
+        s"compactEvery=$compactEvery prepared=$prepared dropped extra: " +
+          snap.columns.mkString(","))
+      snap.select("k", "ts", "p", "extra")
+        .as[(String, Long, String, Option[String])].collect().toSet
+    }
+    val expected = keys.map(k =>
+      if (k == hot) (k, 2L, s"$k@2", Some("x")) else (k, 1L, s"$k@1", None)
+    ).toSet
+    for (prepared <- Seq(false, true)) {
+      val mergeOnWrite = run(0, prepared)
+      assert(mergeOnWrite === run(100, prepared), s"prepared=$prepared")
+      assert(mergeOnWrite === expected, s"prepared=$prepared")
+    }
+  }
+
   test("sinks without column merge refuse partial batches") {
     val dumb = new UpsertJoin.UpsertSink {
       def upsert(keyCol: String, batch: DataFrame): Unit = ()
