@@ -98,16 +98,34 @@ object BucketedState {
     */
   def readBuckets(spark: SparkSession, dir: String, buckets: Seq[Int],
                   schema: Option[StructType] = None): Option[DataFrame] = {
-    recover(dir)
-    val existing = buckets.distinct.map(b => bucketDir(dir, b))
-      .filter(Files.exists(_))
+    val existing = existingBuckets(dir, buckets)
     if (existing.isEmpty) None
     else {
-      val s = schema.getOrElse(graft.sources.ParquetFooters.schema(spark,
-        existing.flatMap(d => partFiles(d.toFile)).map(_.getPath)))
+      val s = schema.getOrElse(footerSchema(spark, existing))
       Some(spark.read.schema(s).parquet(existing.map(_.toString): _*))
     }
   }
+
+  /** The schema [[readBuckets]] reads the given buckets with when it is
+    * given none (None if none of them exists), from their footers.
+    */
+  def bucketsSchema(spark: SparkSession, dir: String,
+                    buckets: Seq[Int]): Option[StructType] =
+    Some(existingBuckets(dir, buckets)).filter(_.nonEmpty)
+      .map(footerSchema(spark, _))
+
+  private def existingBuckets(dir: String, buckets: Seq[Int]): Seq[Path] = {
+    recover(dir)
+    buckets.distinct.map(b => bucketDir(dir, b)).filter(Files.exists(_))
+  }
+
+  private def footerSchema(spark: SparkSession, dirs: Seq[Path]): StructType =
+    graft.sources.ParquetFooters.schema(spark,
+      dirs.flatMap(d => partFiles(d.toFile)).map(_.getPath))
+
+  /** Part files of bucket `b` (none if it does not exist). */
+  private[streaming] def bucketFiles(dir: String, b: Int): Seq[java.io.File] =
+    partFiles(bucketDir(dir, b).toFile)
 
   /** Parquet part files directly under `d` (none if `d` is absent),
     * hidden (`.`/`_`) names skipped.
@@ -243,36 +261,39 @@ object BucketedState {
       .mode("overwrite").parquet(tmp.toString)
   }
 
-  /** Driver-direct single-entity bucket overwrite: each given bucket's
-    * full row content is written via [[LocalParquet]] into a private
-    * inflight dir and rename-swapped live — the jobless analog of
-    * [[overwriteBuckets]] for content that is already a driver array
-    * (the pending-state fold uses it with snapshot rows). Buckets not
-    * in `rowsByBucket` are untouched; a crash before the swaps leaves
-    * live state intact and the orphan inflight dir is swept here on the
-    * next call.
+  /** Driver-direct single-entity bucket overwrite: each of `buckets`
+    * is written with the full row content `rowsOf` gives for it, via
+    * [[LocalParquet]] into a private inflight dir, and rename-swapped
+    * live — the jobless analog of [[overwriteBuckets]] for content the
+    * driver holds or can build (the pending-state fold passes snapshot
+    * rows; the sink's driver compaction merges one bucket per call).
+    * `rowsOf` runs inside the bucket's write task on the JVM's common
+    * pool, so content built there is held for one bucket per pool
+    * thread. Buckets not in `buckets` are untouched; a crash before
+    * the swaps leaves live state intact and the orphan inflight dir is
+    * swept here on the next call.
     */
   private[streaming] def overwriteBucketsLocal(
-      spark: SparkSession, dir: String,
-      rowsByBucket: Map[Int, Array[org.apache.spark.sql.Row]],
+      spark: SparkSession, dir: String, buckets: Seq[Int],
+      rowsOf: Int => Iterator[org.apache.spark.sql.Row],
       schema: org.apache.spark.sql.types.StructType): Unit = {
-    if (rowsByBucket.isEmpty) return
+    if (buckets.isEmpty) return
     recover(dir)
     Files.createDirectories(Paths.get(dir))
     val tmp = Paths.get(dir, ".inflight_fold")
     deleteRecursively(tmp)
-    val work = rowsByBucket.toSeq.map { case (b, rs) =>
+    val work = buckets.distinct.map { b =>
       val d = tmp.resolve(s"$BucketColName=$b")
       Files.createDirectories(d)
-      (b, d, rs)
+      (b, d)
     }
     val conf = LocalParquet.prepareConf(spark, schema)
     import scala.jdk.CollectionConverters._
-    work.asJava.parallelStream().forEach { case (_, d, rs) =>
-      LocalParquet.write(rs.iterator, schema,
+    work.asJava.parallelStream().forEach { case (b, d) =>
+      LocalParquet.write(rowsOf(b), schema,
         d.resolve("part-00000.parquet").toString, conf)
     }
-    work.foreach { case (b, d, _) => swapIn(dir, b, d) }
+    work.foreach { case (b, d) => swapIn(dir, b, d) }
     deleteRecursively(tmp)
   }
 

@@ -85,12 +85,6 @@ object CrmlsStream {
     */
   private val IdxName = "listing_ref_idx"
 
-  /** Kill switch for the pending-delta (LSM) state tier —
-    * `SPARK_GRAFT_STATE_PENDING=off` restores full touched-bucket
-    * rewrites per batch.
-    */
-  private val PendingStateEnabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_STATE_PENDING").contains("off")
   private val IdxSchema = StructType(Seq(
     StructField("ref_col", StringType), StructField("ref_val", StringType),
     StructField("l_uc_pk", StringType)))
@@ -300,17 +294,16 @@ object CrmlsStream {
     *   force every batch past the local tiers onto the distributed
     *   middle/legacy paths (the exact code a 100x-state deployment
     *   runs), not just exercise them on paper.
-    * @param pendingEnabled the pending-delta (LSM) tier flag, defaulting
-    *   to the `SPARK_GRAFT_STATE_PENDING` kill switch — injectable so
-    *   on/off equivalence is testable in-process.
+    * @param pendingEnabled the pending-delta (LSM) tier flag, on by
+    *   default; off restores full touched-bucket rewrites per batch.
+    *   Injectable so on/off equivalence is testable in-process.
     */
   final class StateStore(spark: SparkSession,
                          private[streaming] val dir: String,
                          nBuckets: Int = 16,
                          private[streaming] val localSnapshotMaxRows: Int = 200000,
                          private[streaming] val idxLocalMaxRows: Int = 1000000,
-                         private[streaming] val pendingEnabled: Boolean =
-                           PendingStateEnabled)
+                         private[streaming] val pendingEnabled: Boolean = true)
       extends Serializable {
     private[streaming] def path(entity: String) = s"$dir/$entity"
 
@@ -749,7 +742,7 @@ object CrmlsStream {
               i += 1
             }
             BucketedState.overwriteBucketsLocal(spark, path(entity),
-              byBucket.map { case (b, rs) => b -> rs.toArray }.toMap, schema)
+              byBucket.keys.toSeq, b => byBucket(b).iterator, schema)
             // the snapshot stays installed: the fold wrote exactly its
             // content, so files and snapshot now agree
           case other =>
@@ -1508,7 +1501,7 @@ object CrmlsStream {
       var dimKeys: Map[String, Set[String]] = Map.empty
       var discoveryOverflow = false
 
-      val deltas: Map[String, DataFrame] = if (driverTier) {
+      val deltas: String => DataFrame = if (driverTier) {
         val eIdx = cached.columns.indexOf("entity")
         val vIdx = cached.columns.indexOf("value")
         val valueSchema = StructType(Seq(StructField("value", StringType)))
@@ -1548,8 +1541,13 @@ object CrmlsStream {
             .filter(!_.isNullAt(ki)).map(_.getString(ki)).toSet
           if (ks.isEmpty) None else Some(n -> ks)
         }.toMap
-        allEntities.map(s => s.name ->
-          localDfOf(spark, deltaRows(s.name), projectionSchema(s))).toMap
+        // built on first use: only the lazy merge plans and the
+        // distributed fallbacks read these frames, and each costs a
+        // LocalRelation conversion plus an analysis
+        val frames = scala.collection.concurrent.TrieMap
+          .empty[String, DataFrame]
+        name => frames.getOrElseUpdate(name, localDfOf(spark,
+          deltaRows(name), projectionSchema(specByName(name))))
       } else {
         val planDeltas: Map[String, DataFrame] = allEntities.map(s =>
           s.name -> project(

@@ -346,6 +346,12 @@ object UpsertJoin {
       * appends, the cadence StreamBench measures.
       */
     val DefaultCompactEvery: Int = 10
+
+    /** Largest driver-array batch the sink appends joblessly, and the
+      * most pending rows a compaction window may hold to be folded on
+      * the driver; past either, the frame and Spark paths run.
+      */
+    val DriverAppendMaxRows: Int = 200000
   }
 
   /** Durable keyed upsert sink over hash-bucketed parquet
@@ -394,10 +400,20 @@ object UpsertJoin {
     *   form pays a read+rewrite of every touched bucket per batch,
     *   which is the parquet small-file tax that floors micro-batch
     *   latency. The compaction runs inline, in the append that fills
-    *   the window. Crash-safe the same way the merge path is: deltas
-    *   are only deleted after their compaction's bucket swaps, and
-    *   re-applying an already-compacted delta is a no-op (latest-wins
-    *   on identical content). With changelogDir set, retract pairs are
+    *   the window. A window this instance appended entirely from driver
+    *   arrays (so it knows every touched bucket), holding at most
+    *   [[ParquetUpsertSink.DriverAppendMaxRows]] rows of one column
+    *   set, on a sink without a changelog, folds on the driver with no
+    *   Spark job: the window's latest row per key is held once, and each
+    *   touched bucket is read, merged and rewritten in its own
+    *   common-pool task, so memory stays at the window plus one bucket
+    *   per pool thread (the growth rehash bounds a bucket). Every other
+    *   window — frame appends (catch-up), generations found at a
+    *   restart, mixed column sets, changelog sinks — takes the Spark
+    *   merge-and-write, which scales past the driver. Crash-safe the
+    *   same way the merge path is: deltas are only deleted after their
+    *   compaction's bucket swaps, and re-applying an already-compacted
+    *   delta is a no-op (latest-wins on identical content). With changelogDir set, retract pairs are
     *   emitted AT COMPACTION TIME
     *   (the one moment this mode has both the pre-image and the merged
     *   post-image in hand): one changelog batch per compaction window,
@@ -530,6 +546,11 @@ object UpsertJoin {
       */
     private var pendingBuckets: Option[Set[Int]] =
       if (gen > 0L) None else Some(Set.empty)
+    /** Rows of the pending generations this instance appended from
+      * driver arrays — with [[pendingBuckets]] known, the window's
+      * whole size.
+      */
+    private var pendingRows: Long = 0L
 
     override def bucketCount: Option[Int] = Some(curBuckets)
 
@@ -693,7 +714,8 @@ object UpsertJoin {
         schema: org.apache.spark.sql.types.StructType,
         touched: Seq[Int]): Unit =
       if (touched.nonEmpty) {
-        if (compactEvery <= 0 || rows.length > 200000)
+        if (compactEvery <= 0 ||
+            rows.length > ParquetUpsertSink.DriverAppendMaxRows)
           super.upsertPartialRowsUnique(spark, keyCol, rows, schema, touched)
         else appendDeltaRowsLocal(spark, keyCol, rows, schema)
       }
@@ -708,7 +730,8 @@ object UpsertJoin {
         schema: org.apache.spark.sql.types.StructType,
         touched: Seq[Int]): Unit =
       if (touched.nonEmpty) {
-        if (compactEvery <= 0 || rows.length > 200000)
+        if (compactEvery <= 0 ||
+            rows.length > ParquetUpsertSink.DriverAppendMaxRows)
           super.upsertPreparedRowsUnique(spark, keyCol, rows, schema,
             touched)
         else appendDeltaRowsLocal(spark, keyCol, rows, schema)
@@ -765,6 +788,7 @@ object UpsertJoin {
       }
       java.nio.file.Files.write(genDir.resolve("_SUCCESS"),
         Array.empty[Byte])
+      pendingRows += rows.length
       commitGen(keyCol, Some(buckets.toSet))
     }
 
@@ -954,7 +978,10 @@ object UpsertJoin {
       * a no-op. The generations' schemas come from their footers and
       * their buckets from [[pendingBuckets]] where known, so the
       * whole-row fold opens no frame per generation and runs no job
-      * before its one merge-and-write.
+      * before its one merge-and-write. A window this instance appended
+      * entirely from driver arrays, within the driver-append row cap,
+      * with one column set and no changelog, folds on the driver
+      * instead ([[foldLocal]]) and runs no job at all.
       */
     private def compact(keyCol: String, gens: Seq[java.io.File]): Unit = {
       val schemas = genSchemas(gens)
@@ -964,15 +991,92 @@ object UpsertJoin {
         gdfs.map(_._2.select(col(BucketedState.BucketColName)))
           .reduce(_ union _).distinct().collect().map(_.getInt(0)).toSeq
           .sorted)
-      val baseDf = BucketedState.readBuckets(spark, dir, touched, None)
+      val baseSchema = BucketedState.bucketsSchema(spark, dir, touched)
       val uniform = genFields.map(_.map(_.name)).distinct.size == 1 &&
-        baseDf.forall(b =>
-          rowFields(b.schema).map(_.name) == genFields.head.map(_.name))
+        baseSchema.forall(b =>
+          rowFields(b).map(_.name) == genFields.head.map(_.name))
+      val clEpoch =
+        if (uniform && pendingBuckets.isDefined && changelogDir.isEmpty &&
+            pendingRows <= ParquetUpsertSink.DriverAppendMaxRows) {
+          foldLocal(keyCol, gens, schemas.head, touched)
+          None
+        } else compactSpark(keyCol, gens, schemas.head, gdfs, genFields,
+          touched, BucketedState.readBuckets(spark, dir, touched, baseSchema),
+          uniform)
+      Option(compactFailpoint.get()).foreach(_())
+      gens.foreach(g => BucketedState.deleteRecursively(g.toPath))
+      pendingBuckets = Some(Set.empty)
+      pendingRows = 0L
+      clEpoch.foreach(maybeChangelogCheckpoint)
+    }
+
+    /** The driver form of [[compact]]'s whole-row fold, for a window
+      * whose generations and touched buckets share one column set: read
+      * the generation files once, keeping the latest generation's row
+      * per key (a null key is one key, as in the Spark window), then
+      * rewrite each touched bucket in its own common-pool task — its
+      * rows minus the window's keys, plus the window's winners. The
+      * window is bounded by the driver-append row cap and a bucket by
+      * the growth rehash, and a task holds one bucket, so the driver
+      * holds the window plus one bucket per pool thread.
+      */
+    private def foldLocal(keyCol: String, gens: Seq[java.io.File],
+        genSchema: org.apache.spark.sql.types.StructType,
+        touched: Seq[Int]): Unit = {
+      import org.apache.spark.sql.types.StructType
+      // nullable like a Spark write's files: a base row may hold a null
+      // the generations' writer schema declares impossible (a column a
+      // partial window never set for a new key)
+      val rowSchema =
+        StructType(rowFields(genSchema).map(_.copy(nullable = true)))
+      val rowIdx = rowSchema.fieldNames.map(genSchema.fieldIndex)
+      val gki = genSchema.fieldIndex(keyCol)
+      val genConf = LocalParquet.prepareReadConf(spark, genSchema)
+      import scala.jdk.CollectionConverters._
+      // read in parallel, folded in generation order (ascending, each
+      // generation unique per key): a later one's row replaces an
+      // earlier one's
+      val genRows = gens.flatMap(BucketedState.partFiles).asJava
+        .parallelStream().map[Array[Row]](f =>
+          LocalParquet.read(f.getPath, genSchema, genConf))
+        .toList.asScala
+      val winners = new java.util.HashMap[String, Row]
+      for (rs <- genRows; r <- rs)
+        winners.put(if (r.isNullAt(gki)) null else r.getString(gki),
+          Row.fromSeq(scala.collection.immutable.ArraySeq
+            .unsafeWrapArray(rowIdx.map(r.get))))
+      val byBucket = scala.collection.mutable.Map.empty[Int,
+        java.util.HashMap[String, Row]]
+      winners.forEach { (k, r) =>
+        byBucket.getOrElseUpdate(BucketedState.bucketOfLocal(k, curBuckets),
+          new java.util.HashMap[String, Row]).put(k, r)
+      }
+      val ki = rowSchema.fieldIndex(keyCol)
+      val baseConf = LocalParquet.prepareReadConf(spark, rowSchema)
+      BucketedState.overwriteBucketsLocal(spark, dir, touched, { b =>
+        val win = byBucket.getOrElse(b, new java.util.HashMap[String, Row])
+        BucketedState.bucketFiles(dir, b).iterator
+          .flatMap(f => LocalParquet.read(f.getPath, rowSchema, baseConf))
+          .filterNot(r =>
+            win.containsKey(if (r.isNullAt(ki)) null else r.getString(ki))) ++
+          win.values.asScala.iterator
+      }, rowSchema)
+    }
+
+    /** The Spark form of [[compact]]'s merge-and-write: returns the
+      * changelog epoch it emitted, if the sink keeps a changelog.
+      */
+    private def compactSpark(keyCol: String, gens: Seq[java.io.File],
+        genSchema: org.apache.spark.sql.types.StructType,
+        gdfs: => Seq[(Long, DataFrame)],
+        genFields: Seq[Seq[org.apache.spark.sql.types.StructField]],
+        touched: Seq[Int], baseDf: Option[DataFrame],
+        uniform: Boolean): Option[Long] = {
       val (merged, fullFields, delKeys) = if (uniform) {
         // every generation (and the base) carries the same columns:
         // the original whole-row latest-wins merge — ONE multi-path
         // read with a known schema, one window
-        val del = spark.read.schema(schemas.head)
+        val del = spark.read.schema(genSchema)
           .parquet(gens.map(_.getPath): _*)
         val all = baseDf.map(_.withColumn("__gen", lit(-1L))
             .withColumn(BucketedState.BucketColName,
@@ -1016,10 +1120,7 @@ object UpsertJoin {
           merged, delKeys)
       }
       BucketedState.overwriteBuckets(spark, dir, out, touched)
-      Option(compactFailpoint.get()).foreach(_())
-      gens.foreach(g => BucketedState.deleteRecursively(g.toPath))
-      pendingBuckets = Some(Set.empty)
-      clEpoch.foreach(maybeChangelogCheckpoint)
+      clEpoch
     }
 
     /** Merge-on-write realization of the partial contract: touched

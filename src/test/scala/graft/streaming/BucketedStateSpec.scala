@@ -66,10 +66,10 @@ class BucketedStateSpec extends SparkTestBase {
     val tmp = Files.createTempDirectory("graft-bucketed-footers").toString
     val narrow = Seq(("a", 1L)).toDF("k", "ts")
     val wide = Seq(("b", 2L, "x")).toDF("k", "ts", "extra")
-    BucketedState.overwriteBucketsLocal(spark, tmp,
-      Map(0 -> narrow.collect()), narrow.schema)
-    BucketedState.overwriteBucketsLocal(spark, tmp,
-      Map(3 -> wide.collect()), wide.schema)
+    BucketedState.overwriteBucketsLocal(spark, tmp, Seq(0),
+      _ => narrow.collect().iterator, narrow.schema)
+    BucketedState.overwriteBucketsLocal(spark, tmp, Seq(3),
+      _ => wide.collect().iterator, wide.schema)
     var read: Option[org.apache.spark.sql.DataFrame] = None
     assert(jobsIn {
       read = BucketedState.readBuckets(spark, tmp, Seq(0, 3), None)

@@ -32,6 +32,15 @@ class LsmUpsertSinkSpec extends SparkTestBase {
       (s"k${(5 * i + o) % 12}", i * 10 + o, s"L$i")
     })
 
+  /** 10 driver-array batches of 5 keys over 13 (one of them null): every
+    * window of 3 covers every bucket of 4.
+    */
+  private val driverBatches: Seq[Seq[(String, Int, String)]] =
+    (0 until 10).map(i => (0 until 5).map { o =>
+      val k = (5 * i + o) % 13
+      (if (k == 12) null else s"k$k", i * 10 + o, s"D$i")
+    })
+
   private def drive(sink: UpsertJoin.UpsertSink,
                     seq: Seq[Seq[(String, Int, String)]] = batches): Unit =
     seq.foreach(b => sink.upsert("k", batchDf(b)))
@@ -118,6 +127,65 @@ class LsmUpsertSinkSpec extends SparkTestBase {
       } === (if (sink eq mixed) 3 else 0))
     }
     assert(rowsOf(mixed) === rowsOf(mergeMixed), "mixed column sets")
+
+    // windows of driver-array appends fold on the driver
+    val schema = batchDf(batches.head).schema
+    def appendRows(sink: UpsertJoin.ParquetUpsertSink,
+                   seq: Seq[Seq[(String, Int, String)]]): Unit =
+      seq.foreach(b => sink.upsertPreparedRowsUnique(spark, "k",
+        batchDf(b).collect(), schema, 0 until 4))
+    driverBatches.grouped(3).foreach(w => assert(
+      w.flatten.map(r => BucketedState.bucketOfLocal(r._1, 4)).toSet ===
+        (0 until 4).toSet))
+    assert(driverBatches.flatten.exists(_._1 == null))
+    val mergeDriver = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/dm", 4,
+      deltaCompactEvery = 0)
+    appendRows(mergeDriver, driverBatches)
+    val expectedDriver = rowsOf(mergeDriver)
+    assert(expectedDriver.exists(_._1 == null))
+
+    // three windows of driver-array appends, each folded on the driver,
+    // plus a pending tail: no job at all
+    val folded = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/df", 4,
+      deltaCompactEvery = 3)
+    var n = 0
+    assert(jobsIn { n = compactions(appendRows(folded, driverBatches)) } === 0)
+    assert(n === 3)
+    assert(rowsOf(folded) === expectedDriver, "three driver-folded windows")
+
+    // a crash between the driver fold's swaps and its generation
+    // deletes: the restarted sink replays the folded generations (and
+    // the crashed batch) through the Spark path and converges
+    val crashingDriver = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/dc", 4,
+      deltaCompactEvery = 3)
+    appendRows(crashingDriver, driverBatches.take(5))
+    UpsertJoin.compactFailpoint.set(() => throw new InjectedCrash)
+    try assert(jobsIn(intercept[InjectedCrash](
+      appendRows(crashingDriver, driverBatches.slice(5, 6)))) === 0)
+    finally UpsertJoin.compactFailpoint.set(null)
+    assert(new java.io.File(s"$tmp/dc/__delta").listFiles()
+      .count(_.getName.startsWith("g")) === 3,
+      "the crash left the folded generations on disk")
+    val recoveredDriver = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/dc", 4,
+      deltaCompactEvery = 3)
+    assert(compactions(appendRows(recoveredDriver, driverBatches.drop(5))) === 2)
+    assert(rowsOf(recoveredDriver) === expectedDriver,
+      "replay after a torn driver fold")
+
+    // driver appends, each within the row cap, whose window together
+    // passes it: the Spark path folds that window
+    val half = UpsertJoin.ParquetUpsertSink.DriverAppendMaxRows / 2 + 1
+    val big = Seq("B0", "B1").map(t =>
+      Seq(((0 until half).map(i => (s"k$i", i, t)))))
+    val mergeBig = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/dmb", 4,
+      deltaCompactEvery = 0)
+    big.foreach(appendRows(mergeBig, _))
+    val capped = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/db", 4,
+      deltaCompactEvery = 2)
+    assert(jobsIn(appendRows(capped, big.head)) === 0)
+    assert(jobsIn { n = compactions(appendRows(capped, big(1))) } > 0)
+    assert(n === 1)
+    assert(rowsOf(capped) === rowsOf(mergeBig), "a window past the row cap")
   }
 
   /** Three windows over 4 buckets: every key with (k, ts, p); `extra`
@@ -162,14 +230,21 @@ class LsmUpsertSinkSpec extends SparkTestBase {
     val sink = new UpsertJoin.ParquetUpsertSink(spark, s"$tmp/s", 4,
       deltaCompactEvery = 100)
     val schema = batchDf(batches.head).schema
-    batches.foreach(b => sink.upsertPreparedRowsUnique(spark, "k",
-      batchDf(b).collect(), schema, 0 until 4))
+    def appendRows(): Unit = batches.foreach(b =>
+      sink.upsertPreparedRowsUnique(spark, "k", batchDf(b).collect(), schema,
+        0 until 4))
+    appendRows()
     sink.forceCompact("k")
-    batches.foreach(b => sink.upsertPreparedRowsUnique(spark, "k",
-      batchDf(b).collect(), schema, 0 until 4))
-    // the merge-and-write's jobs only: the base read takes its schema
-    // from the bucket footers
-    assert(jobsIn(sink.forceCompact("k")) === 3)
+    // a window of driver-array appends folds on the driver
+    appendRows()
+    assert(jobsIn(sink.forceCompact("k")) === 0)
+    // a window holding a frame append takes the Spark path: the
+    // discovery of the frame generation's buckets (a distinct collect,
+    // two jobs) and the merge-and-write's three; the base read takes
+    // its schema from the bucket footers
+    appendRows()
+    sink.upsertPreparedUnique("k", batchDf(batches.head), 0 until 4)
+    assert(jobsIn(sink.forceCompact("k")) === 5)
   }
 
   test("appends between compactions write only delta files") {
