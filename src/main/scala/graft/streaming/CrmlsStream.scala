@@ -1462,21 +1462,15 @@ object CrmlsStream {
     // serially and one executor would hold the whole cache. Partition
     // count is the zero-job proxy for batch size: narrow sources stay
     // at 1 (the latency regime this path is tuned for), wide sources
-    // keep bounded parallelism.
-    val srcParts = taggedBatch.rdd.getNumPartitions
-    val coalesced = taggedBatch
-      .coalesce(if (srcParts <= 16) 1 else math.min(64, srcParts / 4))
-    // cache only for the legacy (distributed-discovery) tier, which
-    // re-scans the batch per entity; the driver tier's single probe
-    // collect needs no cache materialization
-    var cachedOpt: Option[DataFrame] = None
-    def cached: DataFrame = cachedOpt.getOrElse {
-      val c = coalesced.cache(); cachedOpt = Some(c); c
-    }
+    // keep bounded parallelism. The batch's own physical RDD gives the
+    // count without planning a second execution (`Dataset.rdd` would).
+    val batchRdd = taggedBatch.queryExecution.toRdd
+    val srcParts = batchRdd.getNumPartitions
+    val width = if (srcParts <= 16) 1 else math.min(64, srcParts / 4)
     val scratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     try {
       // ---- J1: batch materialization + discovery. DRIVER TIER: one
-      // bounded collect of the raw tagged batch; the six envelope
+      // bounded take of the raw tagged batch; the six envelope
       // projections then evaluate over driver-local relations
       // (ConvertToLocalRelation folds them at optimize time) and every
       // touched-bucket set, key list and reverse-index entry is plain
@@ -1484,7 +1478,16 @@ object CrmlsStream {
       // analyze per batch. A catch-up batch past the row budget keeps
       // the distributed discovery aggregation (the legacy leg below),
       // whose collect is CAPPED so truncated key lists are never used.
-      val probeRows = coalesced.limit(driverBatchMaxRows + 1).collect()
+      val eIdx = taggedBatch.schema.fieldIndex("entity")
+      val vIdx = taggedBatch.schema.fieldIndex("value")
+      // strings are copied out per row: the RDD's InternalRows may be
+      // one reused buffer
+      val probeRows: Array[(String, String)] = batchRdd.coalesce(width)
+        .map { r =>
+          (if (r.isNullAt(eIdx)) null else r.getUTF8String(eIdx).toString,
+            if (r.isNullAt(vIdx)) null else r.getUTF8String(vIdx).toString)
+        }
+        .take(driverBatchMaxRows + 1)
       val driverTier = probeRows.length <= driverBatchMaxRows
       val specByName = allEntities.map(s => s.name -> s).toMap
       def mkRefEntries(listingDf: DataFrame): DataFrame =
@@ -1502,13 +1505,10 @@ object CrmlsStream {
       var discoveryOverflow = false
 
       val deltas: String => DataFrame = if (driverTier) {
-        val eIdx = cached.columns.indexOf("entity")
-        val vIdx = cached.columns.indexOf("value")
-        val valueSchema = StructType(Seq(StructField("value", StringType)))
         deltaRows = allEntities.map { s =>
           val vals = probeRows.iterator
-            .filter(r => r.getString(eIdx) == s.name)
-            .map(r => Row(r.getString(vIdx))).toArray
+            .filter(_._1 == s.name)
+            .map(r => Row(r._2)).toArray
           s.name -> (if (vals.isEmpty) Array.empty[Row]
             else { val p = envProjector(spark, s); vals.map(p) })
         }.toMap
@@ -1549,6 +1549,13 @@ object CrmlsStream {
         name => frames.getOrElseUpdate(name, localDfOf(spark,
           deltaRows(name), projectionSchema(specByName(name))))
       } else {
+        // cached only by this legacy (distributed-discovery) tier, which
+        // re-scans the batch per entity. `cache()` registers a
+        // CacheManager entry as soon as it is called, and every later
+        // analysis in the batch consults it: the driver tier never
+        // builds this frame
+        val cached = taggedBatch.coalesce(width).cache()
+        scratch += cached
         val planDeltas: Map[String, DataFrame] = allEntities.map(s =>
           s.name -> project(
             cached.filter(col("entity") === s.name).select("value"), s)).toMap
@@ -1718,13 +1725,14 @@ object CrmlsStream {
                 }
             }
         }
-      val affectedOpt: Option[(DataFrame, Seq[Int], Seq[Int])] =
+      // the affected-key frame is a thunk: only the J4 frame tiers read
+      // it, and the fused/local path must not pay its construction
+      val affectedOpt: Option[(() => DataFrame, Seq[Int], Seq[Int])] =
         affectedLocalPks match {
           case Some(pks) if pks.isEmpty => None
           case Some(pks) =>
-            val affDf = spark.createDataset(pks)(
-              org.apache.spark.sql.Encoders.STRING).toDF("l_uc_pk")
-            Some((affDf,
+            Some((() => spark.createDataset(pks)(
+                org.apache.spark.sql.Encoders.STRING).toDF("l_uc_pk"),
               pks.map(BucketedState.bucketOfLocal(_, storeN)).distinct.sorted,
               sink.bucketCount.map(n =>
                 pks.map(BucketedState.bucketOfLocal(_, n)).distinct.sorted)
@@ -1768,7 +1776,7 @@ object CrmlsStream {
                     BucketedState.bucketOf(col("l_uc_pk"), n))
                     .getOrElse(lit(-1)).as("kb"))
                 .distinct().collect()
-              Some((aff, pairs.map(_.getInt(0)).distinct.sorted,
+              Some((() => aff, pairs.map(_.getInt(0)).distinct.sorted,
                 pairs.map(_.getInt(1)).distinct.sorted))
             }
         }
@@ -2161,13 +2169,15 @@ object CrmlsStream {
                   !r.isNullAt(pkI) && pkSet.contains(r.getString(pkI))))
               case _ => None
             }
-          val affectedListingsOpt: Option[DataFrame] =
+          // a thunk as well: the driver-array tier below reads the
+          // rows themselves, never this frame
+          val affectedListingsOpt: Option[() => DataFrame] =
             affectedListingRows match {
               // parallelDfOf, not localDfOf: a high-fanout dim batch
               // can affect tens of thousands of full-width listing
               // rows — distribute the InternalRow conversion instead
               // of paying it on the driver thread at plan time
-              case Some(rows) => Some(parallelDfOf(spark, rows, lSchema))
+              case Some(rows) => Some(() => parallelDfOf(spark, rows, lSchema))
               case None =>
                 val unTouchedAff = affBuckets.filterNot(
                   touched.getOrElse("listings", Nil).toSet)
@@ -2181,12 +2191,13 @@ object CrmlsStream {
                 // USING join projects the key column FIRST, and a sink
                 // must see ONE column layout regardless of which J4
                 // tier produced a batch's rows
-                else Some(listingParts.reduce(_ unionByName _)
-                  .join(broadcast(affected), Seq("l_uc_pk"), "left_semi")
+                else Some(() => listingParts.reduce(_ unionByName _)
+                  .join(broadcast(affected()), Seq("l_uc_pk"), "left_semi")
                   .select(lSchema.fieldNames.toSeq.map(col): _*))
             }
           mark("J4:aff-df")
-          affectedListingsOpt.foreach { affectedListings =>
+          affectedListingsOpt.foreach { affectedListingsOf =>
+            lazy val affectedListings = affectedListingsOf()
             // dim state for the fallback SQL join: cached snapshot
             // minus touched buckets, plus the lazy merged frame — but a
             // dim already refreshed above serves its (post-merge)
@@ -2381,7 +2392,6 @@ object CrmlsStream {
       mark("J2:promote")
     } finally {
       scratch.foreach(_.unpersist())
-      cachedOpt.foreach(_.unpersist())
     }
   }
 

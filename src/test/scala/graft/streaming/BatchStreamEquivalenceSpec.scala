@@ -42,13 +42,14 @@ class BatchStreamEquivalenceSpec extends SparkTestBase {
     "o_listing_key", "m_resource_record_key", "h_resource_record_key")
 
   private def batchResult(
-      history: Seq[(String, String)] = history): Set[Seq[Any]] = {
+      history: Seq[(String, String)] = history,
+      cols: Seq[String] = compareCols): Set[Seq[Any]] = {
     val byEntity = history.groupBy(_._1).map { case (k, v) =>
       k -> v.map(_._2).toDF("value")
     }
     val full = Crmls.allEntities.map(s =>
       s.name -> byEntity.getOrElse(s.name, Seq.empty[String].toDF("value"))).toMap
-    Crmls.pipeline(full).select(compareCols.map(col): _*)
+    Crmls.pipeline(full).select(cols.map(col): _*)
       .collect().map(_.toSeq).toSet
   }
 
@@ -60,13 +61,16 @@ class BatchStreamEquivalenceSpec extends SparkTestBase {
         CrmlsStream.StateStore =
         (tmp, s) => new CrmlsStream.StateStore(s, s"$tmp/state"),
       driverBatchMaxRows: Int = CrmlsStream.DriverBatchMaxRows,
-      driverAffectedMaxRows: Int = CrmlsStream.DriverAffectedMaxRows)
+      driverAffectedMaxRows: Int = CrmlsStream.DriverAffectedMaxRows,
+      sourcePartitions: Option[Int] = None,
+      cols: Seq[String] = compareCols)
       : Set[Seq[Any]] = {
     implicit val sqlCtx = spark.sqlContext
     val tmp = java.nio.file.Files.createTempDirectory("graft-eq").toString
     val store = mkStore(tmp, spark)
     val sink = mkSink(tmp)
-    val input = MemoryStream[(String, String)]
+    val input = sourcePartitions.fold(MemoryStream[(String, String)])(
+      MemoryStream[(String, String)](_))
     val tagged = input.toDF().toDF("entity", "value")
     batchSplits.foreach { b =>
       input.addData(b: _*)
@@ -75,7 +79,7 @@ class BatchStreamEquivalenceSpec extends SparkTestBase {
         driverAffectedMaxRows = driverAffectedMaxRows)
         .awaitTermination()
     }
-    sink.snapshot(spark).select(compareCols.map(col): _*)
+    sink.snapshot(spark).select(cols.map(col): _*)
       .collect().map(_.toSeq).toSet
   }
 
@@ -88,6 +92,29 @@ class BatchStreamEquivalenceSpec extends SparkTestBase {
     val splits = Seq(history.take(3), history.slice(3, 7),
       history.slice(7, 10), history.drop(10))
     assert(streamResult(splits) === expected)
+  }
+
+  test("a wide batch (48 source partitions) converges like one partition") {
+    // past 16 source partitions processBatch coalesces to srcParts / 4
+    // (12 here), so the driver tier's bounded probe take spans several
+    // partitions, most of them empty; the legacy tier caches the same
+    // coalesced batch and re-scans it per entity
+    val reupdates = (0 until 20).map { i =>
+      "listings" -> env(s"L${i % 3 + 1}", 300 + i,
+        s"""{"ListingKeyNumeric":"LK${i % 3 + 1}-v$i",""" +
+          s""""ListAgentKeyNumeric":"A${i % 2 + 1}","ListOfficeKeyNumeric":"O1"}""")
+    }
+    val long = history ++ reupdates
+    val cols = Crmls.pipeline(Crmls.allEntities.map(s =>
+      s.name -> Seq.empty[String].toDF("value")).toMap).columns.toSeq
+    val expected = batchResult(long, cols)
+    assert(expected.nonEmpty)
+    val one = streamResult(Seq(long), sourcePartitions = Some(1), cols = cols)
+    assert(one === expected, "one partition")
+    assert(streamResult(Seq(long), sourcePartitions = Some(48),
+      cols = cols) === one, "48 partitions, driver tier")
+    assert(streamResult(Seq(long), sourcePartitions = Some(48), cols = cols,
+      driverBatchMaxRows = 0) === one, "48 partitions, legacy tier")
   }
 
   test("forced over-cap fallback: middle + legacy distributed tiers " +
